@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -31,6 +31,15 @@ final case class MutationResult(version: Int,
   *      undisturbed; a crash before the commit leaves the previous
   *      version fully readable and the new files invisible; `vacuum`
   *      reclaims replaced files once history allows.
+  *
+  * The deletion-vector variants ([[deleteWhereDv]], [[updateWhereDv]],
+  * [[mergeDv]]) have a fixed action budget: ONE locate-and-DV-write
+  * action, whose observed metrics (`Dataset.observe`) carry the covered
+  * files and, for UPDATE, the row count and write sizing of the updated
+  * copies — then, for UPDATE/MERGE, one data write. MERGE's source-key
+  * uniqueness check is its one extra action and observes the source's
+  * row count and sizing. A DV lookup the session has not built yet (the
+  * first read of a new DV set) adds one action.
   *
   * Concurrency is OPTIMISTIC at file granularity (the Delta conflict-
   * detection shape, since r15): mutations take NO lock — each computes
@@ -118,6 +127,13 @@ object Mutations {
     }
 
   private val RowIdCol = Versions.RowIdCol
+
+  /** One key tuple of `df` occurring more than once, with its count (a
+    * key column may itself be named `count`: the aggregate is aliased).
+    */
+  private def duplicateKey(df: DataFrame, keyCols: Seq[String]): Option[org.apache.spark.sql.Row] =
+    df.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("__graft_n"))
+      .where(col("__graft_n") > 1).limit(1).collect().headOption
 
   /** Deterministic text of a predicate for the commitInfo surface (the
     * Column's own rendering — advisory metadata, never re-parsed).
@@ -382,7 +398,7 @@ object Mutations {
                     predicate: Column): MutationResult =
     locally {
       val (latest, meta, _, snap) = snapshotWithPath(spark, root, withRowIndex = true)
-      writeDv(spark, root, dvHits(spark, root, snap.where(predicate))) match {
+      writeDv(spark, root, snap.where(predicate))._1 match {
         case None => MutationResult(latest, Nil, Nil)
         case Some(dv) =>
           preCommitHook()
@@ -397,38 +413,36 @@ object Mutations {
       }
     }
 
-  /** Matched snapshot rows → the `(file, row_index)` DV form. FileCol
-    * carries the raw (possibly URI-encoded, scheme-qualified) scan path;
-    * normalize to the root-relative commit-entry form the read-side
-    * anti-join derives.
+  /** Write the `(file, row_index)` pairs of the `matched` snapshot rows
+    * as a fresh `_graft_dv/` sidecar — the locate scan and the DV write
+    * are ONE action, whose observed metrics carry the covered files, plus
+    * `extra` aggregates over `matched`'s columns (the UPDATE path sizes
+    * its data write from them). None (sidecar removed) when nothing
+    * matched. FileCol is already the decoded root-relative
+    * commit-entry form ([[Versions.readFilesWithPath]]) the read-side
+    * lookup derives; decoding it again would turn a hive-escaped `%25`
+    * into a name no file has.
     */
-  private def dvHits(spark: SparkSession, root: String,
-                     matched: DataFrame): DataFrame = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val f = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val qroot = f.makeQualified(rootPath).toUri.getPath
-    matched.select(
-      regexp_replace(StatsIndex.normPath(col(FileCol)),
-        lit("^" + java.util.regex.Pattern.quote(qroot.stripSuffix("/") + "/")),
-        lit("")).as("file"),
-      col(RowIdxCol).as("row_index"))
-  }
-
-  /** Write `hits` as a fresh `_graft_dv/` sidecar; None (sidecar removed)
-    * when nothing matched. Covered files are read back from the written DV
-    * itself: one tiny scan, no second pass over the data.
-    */
-  private def writeDv(spark: SparkSession, root: String,
-                      hits: DataFrame): Option[DvRef] = {
+  private def writeDv(spark: SparkSession, root: String, matched: DataFrame,
+                      extra: Seq[Column] = Nil): (Option[DvRef], Map[String, Any]) = {
     val f = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dvRel = s"${Versions.DvDirName}/${java.util.UUID.randomUUID()}"
     val dvAbs = new org.apache.hadoop.fs.Path(root, dvRel)
-    hits.write.mode("overwrite").parquet(dvAbs.toString)
-    val covered = spark.read.schema(Versions.DvSchema).parquet(dvAbs.toString)
-      .select("file").distinct().collect().map(_.getString(0)).toSeq.sorted
-    if (covered.isEmpty) { f.delete(dvAbs, true); None }
-    else Some(DvRef(dvRel, covered))
+    val obs = Observation()
+    matched
+      .observe(obs, collect_set(FileCol).as("__graft_dv_files"), extra: _*)
+      .select(col(FileCol).as("file"), col(RowIdxCol).as("row_index"))
+      .write.mode("overwrite").parquet(dvAbs.toString)
+    val m = obs.get
+    // a plan Spark proved empty drops the observation: read the (empty)
+    // sidecar back rather than trust a missing metric
+    val covered = m.get("__graft_dv_files").fold(
+      spark.read.schema(Versions.DvSchema).parquet(dvAbs.toString)
+        .select("file").distinct().collect().map(_.getString(0)).toSeq)(
+      _.asInstanceOf[Seq[String]]).sorted
+    if (covered.isEmpty) { f.delete(dvAbs, true); (None, m) }
+    else (Some(DvRef(dvRel, covered)), m)
   }
 
   /** Append `rows` through publish's sized-write path and commit them plus
@@ -438,10 +452,13 @@ object Mutations {
     * A crash between the append and the commit leaves the new files
     * invisible (versioned-root visibility is commit-controlled) and the
     * DV sidecar unreferenced — vacuum reclaims both past the grace
-    * horizon.
+    * horizon. `sizing`, when an earlier action observed it over `rows`,
+    * replaces the append's sizing sample (which otherwise also answers
+    * emptiness).
     */
   private def updateDvCommit(spark: SparkSession, root: String,
                              meta: DatasetMeta, rows: DataFrame,
+                             sizing: Option[Publish.WriteSizing],
                              dv: Option[DvRef],
                              opInfo: Map[String, String] = Map.empty,
                              baseVersion: Option[Int] = None,
@@ -455,11 +472,11 @@ object Mutations {
       else rows.select(rows.schema.fieldNames.toIndexedSeq.map(n =>
         col(n).as(meta.physName(n))): _*)
     val newFiles =
-      if (rows.isEmpty) Nil
+      if (sizing.exists(_.rows == 0)) Nil
       else Publish.publishImpl(spark, physRows, root,
         meta.partitions, "append", Nil, Nil, 16, 0, Nil,
         requireSchemaMatch = meta.colMap.isEmpty, internalRewrite = true,
-        directCommit = true)
+        directCommit = true, emptyOk = true, sizing = sizing)
     val addedRel = Versions.relativize(spark, root, newFiles)
     preCommitHook()
     val v = Versions.commit(spark, root, "update_dv", newFiles, meta,
@@ -501,19 +518,23 @@ object Mutations {
       require(part.isEmpty,
         s"cannot assign partition columns ${part.mkString(",")} in updateWhereDv")
       // matched feeds two actions (the DV write, then the updated copies);
-      // persist so the locate scan runs once
+      // persist so the locate scan runs once. The updated copies ride
+      // beside the DV handles so the DV write also observes their sizing.
       val matched = snap.where(predicate).persist()
       try {
-        writeDv(spark, root, dvHits(spark, root, matched)) match {
-          case None => MutationResult(latest, Nil, Nil)
-          case Some(dv) =>
-            val updated = matched.select(meta.schema.fields.toIndexedSeq.map { f =>
-              assignments.get(f.name) match {
-                case Some(e) => e.cast(f.dataType).as(f.name)
-                case None => col(f.name)
-              }
-            } ++ bases.map(_ => col(RowIdCol)): _*)
-            updateDvCommit(spark, root, meta, updated, Some(dv),
+        val updatedCols = meta.schema.fields.toIndexedSeq.map { f =>
+          assignments.get(f.name) match {
+            case Some(e) => e.cast(f.dataType).as(f.name)
+            case None => col(f.name)
+          }
+        } ++ bases.map(_ => col(RowIdCol))
+        val located = matched.select(updatedCols ++ Seq(col(FileCol), col(RowIdxCol)): _*)
+        val updated = located.drop(FileCol, RowIdxCol)
+        writeDv(spark, root, located,
+            Publish.sizingMetrics(updated.schema, meta.partitions)) match {
+          case (None, _) => MutationResult(latest, Nil, Nil)
+          case (Some(dv), m) =>
+            updateDvCommit(spark, root, meta, updated, Publish.observedSizing(m), Some(dv),
               baseVersion = Some(latest),
               opInfo = Map("op" -> "UPDATE", "mode" -> "dv",
                 "predicate" -> predSql(predicate),
@@ -559,15 +580,23 @@ object Mutations {
       val src = source.select(meta.schema.fields.toIndexedSeq.map(f =>
         col(f.name).cast(f.dataType).as(f.name)): _*).persist()
       try {
-        val dup = src.groupBy(keyCols.map(col): _*).count()
-          .where(col("count") > 1).limit(1).collect()
+        // the duplicate-key check scans all of src: it also observes the
+        // emptiness and write sizing of the appended rows (src, plus the
+        // fixed-width row id when tracked)
+        val written = bases.fold(src.schema)(_ =>
+          src.schema.add(RowIdCol, org.apache.spark.sql.types.LongType))
+        val obs = Observation()
+        val sizingAggs = Publish.sizingMetrics(written, meta.partitions)
+        val dup = duplicateKey(
+          src.observe(obs, sizingAggs.head, sizingAggs.tail: _*), keyCols)
         require(dup.isEmpty,
-          s"merge source is not unique on (${keyCols.mkString(",")}): e.g. ${dup.headOption.getOrElse("")}")
-        if (src.isEmpty) MutationResult(latest, Nil, Nil)
+          s"merge source is not unique on (${keyCols.mkString(",")}): e.g. ${dup.getOrElse("")}")
+        val sizing = Publish.observedSizing(obs.get)
+        if (sizing.fold(src.isEmpty)(_.rows == 0)) MutationResult(latest, Nil, Nil)
         else {
           val matched = snap.join(src.select(keyCols.map(col): _*),
             keyCols, "left_semi")
-          val dv = writeDv(spark, root, dvHits(spark, root, matched))
+          val dv = writeDv(spark, root, matched)._1
           // row tracking: a matched source row is an UPDATE — it inherits
           // the matched target row's id (min over a key-duplicated target,
           // which this path collapses by design); unmatched rows insert
@@ -579,7 +608,7 @@ object Mutations {
                 .agg(min(RowIdCol).as(RowIdCol))
               src.join(idsByKey, keyCols, "left")
           }
-          updateDvCommit(spark, root, meta, srcOut, dv,
+          updateDvCommit(spark, root, meta, srcOut, sizing, dv,
             baseVersion = Some(latest),
             opInfo = Map("op" -> "MERGE", "mode" -> "dv",
               "keys" -> keyCols.mkString(",")),
@@ -667,10 +696,9 @@ object Mutations {
           .select(opCol).limit(1).collect()
         require(badOp.isEmpty,
           s"unknown $opCol value ${badOp.headOption.getOrElse("")}; expected upsert|delete")
-        val dup = normalized.groupBy(keyCols.map(col): _*).count()
-          .where(col("count") > 1).limit(1).collect()
+        val dup = duplicateKey(normalized, keyCols)
         require(dup.isEmpty,
-          s"change batch is not unique on (${keyCols.mkString(",")}): e.g. ${dup.headOption.getOrElse("")}")
+          s"change batch is not unique on (${keyCols.mkString(",")}): e.g. ${dup.getOrElse("")}")
 
         val affected = affectedFiles(
           snap.join(normalized.select(keyCols.map(col): _*), keyCols, "left_semi"))
@@ -787,10 +815,9 @@ object Mutations {
       val src = source.select(meta.schema.fields.toIndexedSeq.map(f =>
         col(f.name).cast(f.dataType).as(f.name)): _*).persist()
       try {
-        val dup = src.groupBy(keyCols.map(col): _*).count()
-          .where(col("count") > 1).limit(1).collect()
+        val dup = duplicateKey(src, keyCols)
         require(dup.isEmpty,
-          s"merge source is not unique on (${keyCols.mkString(",")}): e.g. ${dup.headOption.getOrElse("")}")
+          s"merge source is not unique on (${keyCols.mkString(",")}): e.g. ${dup.getOrElse("")}")
 
         val affected = affectedFiles(
           snap.join(src.select(keyCols.map(col): _*), keyCols, "left_semi"))

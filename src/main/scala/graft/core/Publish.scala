@@ -1,7 +1,7 @@
 package graft.core
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.shim
 import org.apache.spark.sql.types._
@@ -87,43 +87,71 @@ object Publish {
     }
   }
 
-  /** Sample-derived facts used to plan the write. */
-  private final case class SampleStats(approxDistinctPartitions: Long,
-                                       nonEmpty: Boolean)
-
-  /** Estimated in-memory bytes of one row, from a driver-side sample of at
-    * most `n` rows (the Spark analogue of the reference's
-    * `sys.getsizeof(head(1))` row estimate, publish_parq.py:426), plus the
-    * distinct partition-tuple count observed in the sample.
+  /** Facts that size a write: the row count, the mean estimated in-memory
+    * bytes per row ([[rowBytes]]) and the distinct partition tuples. Either
+    * sampled ([[sampleRowBytes]]) or observed by an action that already
+    * scanned the rows ([[sizingMetrics]] / [[observedSizing]]).
     */
-  private def sampleRowBytes(df: DataFrame, partitions: Seq[String] = Nil,
-                             n: Int = 1000): (Double, SampleStats) = {
-    val rows = df.limit(n).collect()
-    if (rows.isEmpty) return (64.0, SampleStats(1L, nonEmpty = false))
-    val fixed: Map[String, Int] = df.schema.fields.map { f =>
-      f.name -> (f.dataType match {
-        case BooleanType => 1
-        case ByteType => 1; case ShortType => 2
-        case IntegerType | FloatType | DateType => 4
-        case _ => 8
-      })
-    }.toMap
-    var total = 0L
-    rows.foreach { r =>
-      df.schema.fields.zipWithIndex.foreach { case (f, i) =>
-        total += (f.dataType match {
-          case StringType => if (r.isNullAt(i)) 4 else r.getString(i).length + 8
-          case BinaryType => if (r.isNullAt(i)) 4 else r.getAs[Array[Byte]](i).length + 8
-          case _: ArrayType => if (r.isNullAt(i)) 4 else r.getSeq[Any](i).length * 8 + 16
-          case _ => fixed(f.name)
-        })
+  private[graft] final case class WriteSizing(rows: Long, bytesPerRow: Double,
+                                             partitionTuples: Long)
+
+  private val EmptySizing = WriteSizing(0L, 64.0, 1L)
+
+  private def quoted(name: String): Column = col("`" + name.replace("`", "``") + "`")
+
+  /** Estimated in-memory bytes of one row — the Spark analogue of the
+    * reference's `sys.getsizeof(head(1))` row estimate
+    * (publish_parq.py:426): strings and binaries cost their length + 8,
+    * arrays 8 per element + 16, a null of those 4, and every other type
+    * its fixed width (a literal: fixed-width fields are never read).
+    */
+  private[core] def rowBytes(schema: StructType): Column =
+    schema.fields.toSeq.map { f =>
+      val c = quoted(f.name)
+      def orNull(e: Column): Column = when(c.isNull, lit(4L)).otherwise(e)
+      f.dataType match {
+        case _: StringType | BinaryType => orNull(length(c).cast(LongType) + 8L)
+        case _: ArrayType => orNull(size(c).cast(LongType) * 8L + 16L)
+        case BooleanType | ByteType => lit(1L)
+        case ShortType => lit(2L)
+        case IntegerType | FloatType | DateType => lit(4L)
+        case _ => lit(8L)
       }
+    }.foldLeft(lit(0L))(_ + _)
+
+  /** The [[WriteSizing]] facts as aggregates for `Dataset.observe` over
+    * the rows about to be written (of `schema`): an action that already
+    * scans those rows then sizes the write for free. Read back with
+    * [[observedSizing]].
+    */
+  private[graft] def sizingMetrics(schema: StructType, partitions: Seq[String]): Seq[Column] =
+    Seq(count(lit(1)).as("__graft_rows"), sum(rowBytes(schema)).as("__graft_bytes")) ++
+      (if (partitions.isEmpty) Nil
+       else Seq(approx_count_distinct(struct(partitions.map(quoted): _*))
+         .as("__graft_parts")))
+
+  /** None when the action carried no observation: Spark drops it from a
+    * plan it proved empty, so a missing metric must not be read as zero
+    * rows — the caller samples instead.
+    */
+  private[graft] def observedSizing(m: Map[String, Any]): Option[WriteSizing] =
+    m.get("__graft_rows").map(_.asInstanceOf[Long]).map { rows =>
+      if (rows == 0) EmptySizing
+      else WriteSizing(rows, m("__graft_bytes").asInstanceOf[Long].toDouble / rows,
+        m.get("__graft_parts").fold(1L)(_.asInstanceOf[Long]))
     }
-    val partIdx = partitions.map(df.schema.fieldIndex)
-    val distinct =
-      if (partIdx.isEmpty) 1L
-      else rows.iterator.map(r => partIdx.map(r.get)).toSet.size.toLong
-    (total.toDouble / rows.length, SampleStats(distinct, nonEmpty = true))
+
+  /** [[WriteSizing]] from a driver-side sample of at most `n` rows: one
+    * action collecting [[rowBytes]] and the partition values.
+    */
+  private[graft] def sampleRowBytes(df: DataFrame, partitions: Seq[String],
+                                    n: Int = 1000): WriteSizing = {
+    val rows = df.select(rowBytes(df.schema) +: partitions.map(quoted): _*)
+      .limit(n).collect()
+    if (rows.isEmpty) EmptySizing
+    else WriteSizing(rows.length, rows.map(_.getLong(0)).sum.toDouble / rows.length,
+      if (partitions.isEmpty) 1L
+      else rows.map(r => partitions.indices.map(i => r.get(i + 1))).toSet.size.toLong)
   }
 
   /** Write `df` as a hive-partitioned snappy-parquet dataset at `root`,
@@ -449,21 +477,24 @@ object Publish {
   }
 
   /** Shapes a frame for a publish write: validates inputs, derives the
-    * records-per-file cap from a sampled bytes/row estimate (the ~60 MB
-    * target), routes rows (salted partition routing, or z-range when
-    * z-ordering), and applies within-task clustering. Pure plan surgery,
-    * no I/O beyond the sizing sample — shared by the default
-    * (listing-diff) and direct-commit write paths.
+    * records-per-file cap from a bytes/row estimate (the ~60 MB target),
+    * routes rows (salted partition routing, or z-range when z-ordering),
+    * and applies within-task clustering. Pure plan surgery, no I/O beyond
+    * the sizing sample — shared by the default (listing-diff) and
+    * direct-commit write paths.
     */
   /** `emptyOk = true` returns None for an empty frame instead of
     * throwing — internal rewrite paths use it so "the delete removed
     * every row of the affected files" costs no extra emptiness probe.
+    * `sizing`: facts a caller already observed over exactly these rows
+    * (see [[sizingMetrics]]); the sizing sample is then skipped.
     */
   private[core] def prepareForWrite(spark: SparkSession, df: DataFrame,
                                     partitions: Seq[String], sortCols: Seq[String],
                                     zorderCols: Seq[String], zorderBits: Int,
                                     zorderPartitions: Int,
-                                    emptyOk: Boolean = false): Option[(DataFrame, Long)] = {
+                                    emptyOk: Boolean = false,
+                                    sizing: Option[WriteSizing] = None): Option[(DataFrame, Long)] = {
     require(sortCols.forall(df.columns.contains),
       s"sort columns ${sortCols.filterNot(df.columns.contains).mkString(",")} do not exist")
     require(zorderCols.forall(df.columns.contains),
@@ -480,12 +511,10 @@ object Publish {
     // frame a second time — for mutation rewrites that frame is a join
     // over the affected files, so every publish paid an extra pass
     // (guide §1.2: don't compute things twice).
-    val (rowBytes, sampleRows) = sampleRowBytes(df, partitions)
-    if (!sampleRows.nonEmpty && emptyOk) return None
-    require(sampleRows.nonEmpty, "Empty dataframes cannot be published.")
-    // Parquet bytes/row ≈ in-memory bytes / compression ratio; cap records
-    // per file so no output file materially exceeds the 60 MB target.
-    val recordsPerFile = math.max(1L, (TargetFileBytes / (rowBytes / CompressionRatio)).toLong)
+    val sized = sizing.getOrElse(sampleRowBytes(df, partitions))
+    if (sized.rows == 0 && emptyOk) return None
+    require(sized.rows > 0, "Empty dataframes cannot be published.")
+    val maxRecords = recordsPerFile(sized)
 
     // non-empty: checkPartitions rejects fully-partitioned frames
     val dataCols = df.columns.filterNot(partitions.contains)
@@ -523,9 +552,8 @@ object Publish {
           // distinct partition values it collapses to 1 so file counts
           // stay low. Derived from the row itself (deterministic, no
           // rand()) so retried tasks re-route rows identically.
-          val distinctInSample = math.max(1L, sampleRows.approxDistinctPartitions)
-          val parallelism = spark.sparkContext.defaultParallelism
-          val saltBuckets = math.max(1L, math.min(64L, parallelism / distinctInSample)).toInt
+          val (saltBuckets, pinWidth) =
+            saltRouting(spark.sparkContext.defaultParallelism, sized)
           val salt = pmod(xxhash64(dataCols.map(col).toIndexedSeq: _*), lit(saltBuckets))
           val partKeys = partitions.map(col) :+ salt
           // MANY-DIRS writes pin the exchange width instead of leaving it
@@ -543,7 +571,7 @@ object Publish {
           // numShufflePartitions: already resolved to an Int — the raw
           // conf value can be non-numeric ("auto" on some platforms) and
           // a toInt would fail every many-partition write (ADVICE r17)
-          if (distinctInSample >= parallelism)
+          if (pinWidth)
             df.repartition(
               spark.sessionState.conf.numShufflePartitions, partKeys: _*)
           else df.repartition(partKeys: _*)
@@ -559,7 +587,23 @@ object Publish {
         if (sortCols.isEmpty) routed
         else routed.sortWithinPartitions((partitions ++ sortCols).map(col): _*)
     }
-    Some((out, recordsPerFile))
+    Some((out, maxRecords))
+  }
+
+  /** Records-per-file cap: parquet bytes/row ≈ in-memory bytes /
+    * compression ratio, so no output file materially exceeds the 60 MB
+    * target.
+    */
+  private[graft] def recordsPerFile(s: WriteSizing): Long =
+    math.max(1L, (TargetFileBytes / (s.bytesPerRow / CompressionRatio)).toLong)
+
+  /** The salted-routing decision of a partitioned write (see
+    * [[prepareForWrite]]): the salt bucket count, and whether the exchange
+    * width is pinned because the rows span at least `parallelism` dirs.
+    */
+  private[graft] def saltRouting(parallelism: Int, s: WriteSizing): (Int, Boolean) = {
+    val tuples = math.max(1L, s.partitionTuples)
+    (math.max(1L, math.min(64L, parallelism / tuples)).toInt, tuples >= parallelism)
   }
 
   private[core] def publishImpl(spark: SparkSession, df0: DataFrame, root: String,
@@ -571,7 +615,8 @@ object Publish {
                           metaSchemaOverride: Option[StructType] = None,
                           directCommit: Boolean = false,
                           internalRewrite: Boolean = false,
-                          emptyOk: Boolean = false): Seq[String] = {
+                          emptyOk: Boolean = false,
+                          sizing: Option[WriteSizing] = None): Seq[String] = {
     require(mode == "overwrite" || mode == "append", s"unsupported publish mode $mode")
     // `_graft_row_id` is reserved for row tracking: only INTERNAL rewrite
     // paths (mutations, OPTIMIZE) may carry it through a write — they
@@ -624,8 +669,10 @@ object Publish {
       }
     }
 
+    // derived transform columns are not among the rows a caller observed
     val prepared = prepareForWrite(spark, df, partitions,
-      sortCols, zorderCols, zorderBits, zorderPartitions, emptyOk = emptyOk)
+      sortCols, zorderCols, zorderBits, zorderPartitions, emptyOk = emptyOk,
+      sizing = sizing.filter(_ => df eq df0))
     // empty + emptyOk: nothing to write, no side effects taken yet —
     // the caller (a rewrite whose delete emptied the affected files)
     // commits removal-only

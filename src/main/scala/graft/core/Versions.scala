@@ -1567,12 +1567,14 @@ object Versions {
       val dvRows = dvs.map(d => spark.read.schema(DvSchema)
           .parquet(new Path(root, d.dir).toString))
         .reduce(_.unionByName(_))
-      if (dvRows.limit(dvInlineMax(spark).toInt + 1).count() > dvInlineMax(spark)) None
+      // one action: the row cap rides the grouped collect (past it the
+      // collected rows are dropped and the anti-join path takes over)
+      val grouped = dvRows.limit(dvInlineMax(spark).toInt + 1).groupBy("file")
+        .agg(sort_array(collect_list("row_index")).as("idxs")).collect()
+      val relArr = grouped.map(r =>
+        r.getString(0) -> r.getSeq[Long](1).toArray).toMap
+      if (relArr.valuesIterator.map(_.length.toLong).sum > dvInlineMax(spark)) None
       else {
-        val grouped = dvRows.groupBy("file")
-          .agg(sort_array(collect_list("row_index")).as("idxs")).collect()
-        val relArr = grouped.map(r =>
-          r.getString(0) -> r.getSeq[Long](1).toArray).toMap
         val entries = dvScanKeys(spark, root, relArr.keys.toSeq)
           .flatMap { case (rel, k) => relArr.get(rel).map(k -> _) }.toArray
         Some(new graft.functions.DvLookup(entries))

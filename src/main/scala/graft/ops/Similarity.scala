@@ -379,7 +379,11 @@ object Similarity {
     val methods = approxByMethod.map(_._1).toDF("method")
     val a = approxByMethod.map { case (m, df) =>
       df.select(lit(m).as("method"), col("query_id"), col("neighbor_id"))
-    }.reduce(_.unionAll(_)).withColumn("__hit", lit(1))
+    }.reduce(_.unionAll(_))
+      // a repeated approx pair is ONE hit: without this it would duplicate
+      // its exact row in the left join and inflate both n and hits
+      .dropDuplicates("method", "query_id", "neighbor_id")
+      .withColumn("__hit", lit(1))
     exact.select(col("query_id"), col("neighbor_id"))
       .crossJoin(broadcast(methods))
       .join(a, Seq("method", "query_id", "neighbor_id"), "left")

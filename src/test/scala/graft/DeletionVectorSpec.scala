@@ -1,7 +1,10 @@
 package graft
 
+import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
 import graft.core.{Fetch, Mutations, Publish, StatsIndex, Versions}
 
@@ -13,9 +16,11 @@ import graft.core.{Fetch, Mutations, Publish, StatsIndex, Versions}
   * Compaction materializes deletes; RESTORE carries them; vacuum
   * reference-counts the sidecars.
   */
-class DeletionVectorSpec extends AnyFunSuite {
+class DeletionVectorSpec extends AnyFunSuite with TimeLimits {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
+  // interrupt a hung body (an Observation.get that never completes)
+  private implicit val signaler: Signaler = ThreadSignaler
 
   private def physicalFiles(root: String): Set[String] =
     Publish.listPhysicalDataFilesWithSize(spark, root).map(_._1).toSet
@@ -284,5 +289,102 @@ class DeletionVectorSpec extends AnyFunSuite {
     val diff = Versions.rowDiff(spark, root, 1, 2, Seq("id"))
     val removed = diff.where(col("change_type") === "removed")
     assert(removed.count() == 1 && ids(removed) == Seq(7L))
+  }
+
+  private def dvDirs(root: String): Seq[String] =
+    Option(new java.io.File(root, "_graft_dv").list()).toSeq.flatten
+
+  test("observed DV covered files equal the sidecar's file column (URI-escaped dirs)") {
+    failAfter(120.seconds) {
+      val root = TestSpark.tmpDir("dv_escaped")
+      Publish.publishVersioned(spark,
+        (0 until 60).map(i => (i.toLong, if (i % 2 == 0) "a b" else "c%d", i * 1.0))
+          .toDF("id", "d", "v"), root, Seq("d"))
+      val del = Mutations.deleteWhereDv(spark, root, col("id") % 5 === 0)
+      val upd = Mutations.updateWhereDv(spark, root, col("id") % 7 === 1,
+        Map("v" -> lit(-1.0)))
+      Seq(del.version, upd.version).foreach { v =>
+        val dv = Versions.readEntry(spark, root, v).dvs.head
+        val sidecar = spark.read.parquet(new java.io.File(root, dv.dir).toString)
+          .select("file").distinct().as[String].collect().sorted.toSeq
+        assert(dv.files == sidecar && dv.files.size == 2)
+        // the on-disk names: hive escapes `%` as `%25`, which must not be
+        // decoded a second time
+        assert(dv.files.exists(_.startsWith("d=a b/")) &&
+          dv.files.exists(_.startsWith("d=c%25d/")))
+      }
+      assert(ids(Fetch.fetch(spark, root)) == (0L until 60L).filterNot(_ % 5 == 0))
+      assert(Fetch.fetch(spark, root).where(col("v") === -1.0).count() ==
+        (0 until 60).count(i => i % 7 == 1 && i % 5 != 0))
+    }
+  }
+
+  test("no-match dv mutations leave no sidecar dir, commit nothing and never hang") {
+    failAfter(120.seconds) {
+      val root = TestSpark.tmpDir("dv_nomatch")
+      Publish.publishVersioned(spark,
+        (0 until 30).map(i => (i.toLong, s"g${i % 3}", i * 1.0)).toDF("id", "grp", "v"),
+        root, Seq("grp"))
+      val d = Mutations.deleteWhereDv(spark, root, col("id") > 1000)
+      val u = Mutations.updateWhereDv(spark, root, col("id") < 0, Map("v" -> lit(0.0)))
+      assert(d == graft.core.MutationResult(1, Nil, Nil) && u == d)
+      assert(Versions.latestVersion(spark, root).contains(1) && dvDirs(root).isEmpty)
+      // a merge whose source matches no key inserts without any DV
+      val m = Mutations.mergeDv(spark, root,
+        Seq((500L, "g0", 5.0)).toDF("id", "grp", "v"), Seq("id"))
+      assert(m.version == 2 && m.addedFiles.nonEmpty)
+      assert(Versions.readEntry(spark, root, 2).dvs.isEmpty && dvDirs(root).isEmpty)
+      assert(ids(Fetch.fetch(spark, root)) == ((0L until 30L) :+ 500L))
+      // a snapshot with no files left: nothing to scan, nothing observed
+      Mutations.deleteWhere(spark, root, lit(true))
+      val gone = Versions.latestVersion(spark, root).get
+      assert(Mutations.deleteWhereDv(spark, root, col("id") > 0).version == gone)
+      assert(Mutations.updateWhereDv(spark, root, col("id") > 0,
+        Map("v" -> lit(1.0))).version == gone)
+      assert(Mutations.mergeDv(spark, root,
+        Seq.empty[(Long, String, Double)].toDF("id", "grp", "v"), Seq("id")).version == gone)
+      assert(dvDirs(root).isEmpty)
+      Mutations.mergeDv(spark, root, Seq((7L, "g1", 7.0)).toDF("id", "grp", "v"), Seq("id"))
+      assert(ids(Fetch.fetch(spark, root)) == Seq(7L))
+    }
+  }
+
+  test("mergeDv: an empty source is a no-op, a duplicate-key source is refused before any write") {
+    failAfter(120.seconds) {
+      val root = TestSpark.tmpDir("dv_merge_guard")
+      Publish.publishVersioned(spark,
+        (0 until 20).map(i => (i.toLong, i * 1.0)).toDF("id", "v"), root, Nil)
+      val before = physicalFiles(root)
+      val empty = Mutations.mergeDv(spark, root,
+        Seq.empty[(Long, Double)].toDF("id", "v"), Seq("id"))
+      assert(empty == graft.core.MutationResult(1, Nil, Nil))
+      val e = intercept[IllegalArgumentException](Mutations.mergeDv(spark, root,
+        Seq((1L, 1.0), (1L, 2.0), (3L, 3.0)).toDF("id", "v"), Seq("id")))
+      assert(e.getMessage.contains("merge source is not unique on (id): e.g. [1,2]"))
+      assert(physicalFiles(root) == before && dvDirs(root).isEmpty)
+      assert(Versions.latestVersion(spark, root).contains(1))
+    }
+  }
+
+  test("observed write sizing equals the sample on a mixed-type frame") {
+    failAfter(120.seconds) {
+      import java.sql.Date
+      val df = (0 until 700).map { i =>
+        (if (i % 9 == 0) null else "s" * (i % 23), Array.fill(i % 5)(i.toByte),
+          Seq.fill(i % 4)(i.toLong), i, i.toLong * 7, Date.valueOf("2026-01-01"),
+          s"p${i % 6}", i % 3)
+      }.toDF("s", "b", "arr", "n", "l", "day", "p", "q")
+      val parts = Seq("p", "q")
+      val sample = Publish.sampleRowBytes(df, parts)
+      val obs = Observation()
+      val aggs = Publish.sizingMetrics(df.schema, parts)
+      df.observe(obs, aggs.head, aggs.tail: _*).collect()
+      val observed = Publish.observedSizing(obs.get).get
+      assert(observed == sample && sample.rows == 700 && sample.partitionTuples == 6)
+      assert(Publish.recordsPerFile(observed) == Publish.recordsPerFile(sample))
+      Seq(1, 4, 6, 7, 32).foreach { par =>
+        assert(Publish.saltRouting(par, observed) == Publish.saltRouting(par, sample))
+      }
+    }
   }
 }

@@ -59,6 +59,16 @@ class SimilaritySpec extends AnyFunSuite {
     assert(got == Map(1L -> 0.5, 2L -> 0.0))
   }
 
+  test("recallVsBruteTagged counts a repeated approx pair once") {
+    val brute = Seq((1L, 10L), (1L, 11L), (2L, 20L)).toDF("query_id", "neighbor_id")
+    val dup = Seq((1L, 10L), (1L, 10L), (2L, 20L)).toDF("query_id", "neighbor_id")
+    val clean = Seq((1L, 10L), (2L, 20L)).toDF("query_id", "neighbor_id")
+    val got = Similarity.recallVsBruteTagged(Seq("dup" -> dup, "clean" -> clean), brute)
+      .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    assert(got == Map(("dup", 1L) -> 0.5, ("dup", 2L) -> 1.0,
+      ("clean", 1L) -> 0.5, ("clean", 2L) -> 1.0))
+  }
+
   test("IVF top-k achieves high recall vs brute force on clustered data") {
     val queries = corpus.where($"vec_id" < 10)
     val exact = Similarity.bruteForceTopK(corpus, queries, 5)
