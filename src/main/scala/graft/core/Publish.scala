@@ -141,6 +141,19 @@ object Publish {
         m.get("__graft_parts").fold(1L)(_.asInstanceOf[Long]))
     }
 
+  /** `body` over `df` materialised once: an eager local checkpoint (the
+    * [[graft.ops.Dedup.duplicateClusters]] precedent) whose one action
+    * also observes `metrics`, so every consumer in `body` reads the
+    * checkpoint instead of re-running `df`'s plan. The checkpoint's blocks
+    * are dropped when `body` returns rather than left for a GC to find.
+    */
+  private[graft] def materialised[T](df: DataFrame, metrics: Seq[Column])(
+      body: (DataFrame, Map[String, Any]) => T): T = {
+    val obs = org.apache.spark.sql.Observation()
+    val cp = df.observe(obs, metrics.head, metrics.tail: _*).localCheckpoint()
+    try body(cp, obs.get) finally shim.dropLocalCheckpoint(cp)
+  }
+
   /** [[WriteSizing]] from a driver-side sample of at most `n` rows: one
     * action collecting [[rowBytes]] and the partition values.
     */
@@ -830,67 +843,63 @@ object Publish {
     * batch (the at-least-once reality of every large ingestion pipeline)
     * appends nothing the second time.
     *
-    * Exact, at scale, WITHOUT anti-joining the full batch against the
-    * full dataset: a Bloom filter of the existing keys (one column-pruned
-    * pass) splits the batch map-side — rows the filter rejects are
-    * DEFINITELY new (no false negatives) and skip the join entirely; only
-    * the ~fpp + true-duplicate fraction pays an exact anti-join. The
-    * batch itself must be unique on `keyCols` (it is deduplicated here
-    * defensively, keeping an arbitrary row per key like the reference's
-    * last-write-wins object overwrite).
+    * Exact, in ONE pass over the stored keys: the batch (deduplicated
+    * here defensively on `keyCols`, keeping an arbitrary row per key like
+    * the reference's last-write-wins object overwrite) is null-safe
+    * anti-joined against the dataset's column-pruned key scan. The
+    * surviving rows are materialised by one action that also observes
+    * their count and write sizing, so into an existing dataset the call
+    * runs two Spark actions — that one and the write — and one when
+    * nothing is new.
     *
     * Returns the newly written files (empty when nothing was new).
     */
   def publishDedupAppend(spark: SparkSession, df: DataFrame, root: String,
-                         keyCols: Seq[String], fpp: Double = 0.01,
+                         keyCols: Seq[String],
                          firstCreatePartitions: Seq[String] = Nil): Seq[String] =
-    dedupAppendImpl(spark, df, root, keyCols, fpp,
-      firstCreatePartitions, knownBloom = None, needState = false)._1
+    dedupAppendImpl(spark, df, root, keyCols, firstCreatePartitions,
+      stateFpp = None, knownBloom = None)._1
 
-  /** [[publishDedupAppend]] returning the Bloom filter of ALL keys now in
-    * the dataset (existing ∪ appended) alongside the written files. A
-    * caller appending repeatedly (a streaming sink) passes the returned
-    * filter back as `knownBloom` and skips the existing-key count + bloom
-    * build passes on every subsequent batch — only the exact anti-join of
-    * the (small) candidate fraction still reads the dataset's keys. A
-    * carried filter's fpp degrades as the dataset outgrows its sizing;
-    * that costs anti-join work, never correctness (false positives are
-    * resolved exactly). Drop the state to rebuild at the right size.
+  /** [[publishDedupAppend]] returning a Bloom filter (false-positive
+    * rate `fpp`) of ALL keys now in the dataset (existing ∪ appended)
+    * alongside the written files — state for a caller appending
+    * repeatedly (a streaming sink). Passing the returned filter back as
+    * `knownBloom` skips the existing-key count + filter build passes on
+    * every later batch; the appended keys are folded in by one small pass
+    * over the new rows. The filter never decides which rows are new (the
+    * anti-join does), so a carried filter whose fpp degrades as the
+    * dataset outgrows its sizing costs nothing in correctness. Drop the
+    * state to rebuild it at the right size.
     */
   def publishDedupAppendWithState(spark: SparkSession, df: DataFrame, root: String,
                                   keyCols: Seq[String], fpp: Double = 0.01,
                                   firstCreatePartitions: Seq[String] = Nil,
                                   knownBloom: Option[Array[Byte]] = None): (Seq[String], Array[Byte]) = {
-    val (files, state) = dedupAppendImpl(spark, df, root, keyCols, fpp,
-      firstCreatePartitions, knownBloom, needState = true)
+    val (files, state) = dedupAppendImpl(spark, df, root, keyCols,
+      firstCreatePartitions, Some(fpp), knownBloom)
     (files, state.get)
   }
 
-  /** Shared core: `needState=false` (the plain append) skips the state
-    * bloom construction entirely — building and folding a filter nobody
-    * will read costs an extra aggregate pass per call.
+  /** Shared core: `stateFpp = None` (the plain append) builds no filter.
     *
     * The ENTIRE read-prove-append cycle runs under the dataset's writer
     * lock: without it, two concurrent deliveries of overlapping batches
-    * could each prove the other's keys absent (both bloom probes ran
-    * before either wrote) and insert duplicates — the exactly-once
-    * guarantee would hold per-writer but not per-dataset.
+    * could each prove the other's keys absent (both key scans ran before
+    * either wrote) and insert duplicates — the exactly-once guarantee
+    * would hold per-writer but not per-dataset.
     */
   private def dedupAppendImpl(spark: SparkSession, df: DataFrame, root: String,
-                              keyCols: Seq[String], fpp: Double,
-                              firstCreatePartitions: Seq[String],
-                              knownBloom: Option[Array[Byte]],
-                              needState: Boolean): (Seq[String], Option[Array[Byte]]) =
+                              keyCols: Seq[String], firstCreatePartitions: Seq[String],
+                              stateFpp: Option[Double],
+                              knownBloom: Option[Array[Byte]]): (Seq[String], Option[Array[Byte]]) =
     DatasetLock.withLock(spark, root) {
-      dedupAppendInner(spark, df, root, keyCols, fpp, firstCreatePartitions,
-        knownBloom, needState)
+      dedupAppendInner(spark, df, root, keyCols, firstCreatePartitions, stateFpp, knownBloom)
     }
 
   private def dedupAppendInner(spark: SparkSession, df: DataFrame, root: String,
-                               keyCols: Seq[String], fpp: Double,
-                               firstCreatePartitions: Seq[String],
-                               knownBloom: Option[Array[Byte]],
-                               needState: Boolean): (Seq[String], Option[Array[Byte]]) = {
+                               keyCols: Seq[String], firstCreatePartitions: Seq[String],
+                               stateFpp: Option[Double],
+                               knownBloom: Option[Array[Byte]]): (Seq[String], Option[Array[Byte]]) = {
     require(keyCols.nonEmpty && keyCols.forall(df.columns.contains),
       s"key columns ${keyCols.filterNot(df.columns.contains).mkString(",")} do not exist")
     val meta = DatasetMeta.read(spark, root)
@@ -900,6 +909,12 @@ object Publish {
     require(meta.nonEmpty || !Fetch.hasData(spark, root),
       s"cannot dedup-append to $root: it contains data but no graft metadata " +
         "(recover or republish with mode=overwrite)")
+    val keyHash = xxhash64(keyCols.map(col): _*)
+    def bloomOf(keys: DataFrame, fpp: Double): Array[Byte] = {
+      val n = math.max(1L, keys.count())
+      keys.agg(graft.functions.ProbFilters.bloomAgg(keyHash, n, fpp).as("b"))
+        .head().getAs[Array[Byte]]("b")
+    }
     if (meta.isEmpty || !Fetch.hasData(spark, root)) {
       val parts = meta.map(_.partitions).getOrElse(firstCreatePartitions)
       require(meta.isEmpty || firstCreatePartitions.isEmpty ||
@@ -908,23 +923,15 @@ object Publish {
           s"existing dataset's partitions ${meta.get.partitions}")
       val deduped = df.dropDuplicates(keyCols)
       val files = publish(spark, deduped, root, parts)
-      val bloom0 =
-        if (!needState) None
-        else {
-          val keyHash0 = xxhash64(keyCols.map(col): _*)
-          val n0 = math.max(1L, deduped.count())
-          Some(deduped
-            .agg(graft.functions.ProbFilters.bloomAgg(keyHash0, n0, fpp).as("b"))
-            .head().getAs[Array[Byte]]("b"))
-        }
-      return (files, bloom0)
+      return (files, stateFpp.map(bloomOf(deduped, _)))
     }
     val m = meta.get
     require(keyCols.forall(m.schema.fieldNames.contains),
       "key columns must exist in the dataset schema")
     // XxHash64 hashes the Int and Long forms of the same value differently
-    // — a batch/dataset key-type mismatch would produce bloom false
-    // negatives and silent duplicate appends. Fail fast instead.
+    // — a batch/dataset key-type mismatch would make a carried filter
+    // disagree with the stored keys, and the append's schema check would
+    // refuse the rows only after the key scan. Fail fast instead.
     keyCols.foreach { c =>
       require(df.schema(c).dataType == m.schema(c).dataType,
         s"key column $c: batch type ${df.schema(c).dataType} must equal " +
@@ -933,46 +940,38 @@ object Publish {
     val batch = df.dropDuplicates(keyCols)
     // one column-pruned pass over the existing dataset: keys only
     val existing = Fetch.fetch(spark, root).select(keyCols.map(col): _*)
-    val keyHash = xxhash64(keyCols.map(col): _*)
-    val bloomBytes = knownBloom.getOrElse {
-      val n = math.max(1L, existing.count())
-      existing.agg(graft.functions.ProbFilters.bloomAgg(keyHash, n, fpp).as("b"))
-        .head().getAs[Array[Byte]]("b")
-    }
-    val seen = graft.functions.ProbFilters.mightContain(spark, keyHash, bloomBytes)
-    val definitelyNew = batch.where(!seen)
-    val candidates = batch.where(seen)
+    val bloomBytes = stateFpp.map(fpp => knownBloom.getOrElse(bloomOf(existing, fpp)))
     // null-safe equality: a redelivered null-keyed row must match its
     // stored twin (plain = treats null keys as never-equal and would
     // re-append them forever)
-    val ex = existing.dropDuplicates(keyCols)
-      .select(keyCols.map(c => col(c).as(s"__ex_$c")): _*)
-    val cond = keyCols.map(c => candidates(c) <=> ex(s"__ex_$c")).reduce(_ && _)
-    val trulyNew = candidates.join(ex, cond, "left_anti")
-    // persist: emptiness check, publish's sizing sample, the write and
-    // the bloom fold would otherwise each re-run the bloom probe +
-    // anti-join (and their full pass over the existing dataset)
-    val newRows = definitelyNew.unionByName(trulyNew).persist()
-    try {
-      if (newRows.isEmpty) (Nil, Some(bloomBytes).filter(_ => needState))
-      else {
-        val files = publish(spark, newRows, root, m.partitions, mode = "append")
-        if (!needState) (files, None)
+    val ex = existing.select(keyCols.map(c => col(c).as(s"__ex_$c")): _*)
+    val cond = keyCols.map(c => batch(c) <=> ex(s"__ex_$c")).reduce(_ && _)
+    // ONE action materialises the new rows and observes their count and
+    // write sizing: the write and the state fold read the checkpoint
+    // instead of re-running the key scan and the anti-join
+    materialised(batch.join(ex, cond, "left_anti"), sizingMetrics(batch.schema, m.partitions)) {
+      (newRows, observed) =>
+        val sizing = observedSizing(observed)
+        if (sizing.exists(_.rows == 0)) (Nil, bloomBytes)
         else {
+          // no observation: publish samples, and an empty sample writes nothing
+          val files = publishImpl(spark, newRows, root, m.partitions, "append",
+            Nil, Nil, 16, 0, Nil, emptyOk = true, sizing = sizing)
           // fold the appended keys into the filter (same geometry) so the
-          // caller can carry complete state into the next batch — one
-          // tiny pass over newRows, no dataset rescan
-          val (nh, nb, words) = graft.functions.ProbFilterOps.deserializeBloom(bloomBytes)
-          val appended = newRows
-            .agg(graft.functions.ProbFilters.bloomAggSized(keyHash, nb, nh).as("b"))
-            .head().getAs[Array[Byte]]("b")
-          val (_, _, addWords) = graft.functions.ProbFilterOps.deserializeBloom(appended)
-          var i = 0
-          while (i < words.length) { words(i) |= addWords(i); i += 1 }
-          (files, Some(graft.functions.ProbFilterOps.serializeBloom(nh, nb, words)))
+          // caller carries complete state into the next batch — one tiny
+          // pass over the checkpointed new rows, no dataset rescan
+          (files, bloomBytes.map { bytes =>
+            val (nh, nb, words) = graft.functions.ProbFilterOps.deserializeBloom(bytes)
+            val appended = newRows
+              .agg(graft.functions.ProbFilters.bloomAggSized(keyHash, nb, nh).as("b"))
+              .head().getAs[Array[Byte]]("b")
+            val (_, _, addWords) = graft.functions.ProbFilterOps.deserializeBloom(appended)
+            var i = 0
+            while (i < words.length) { words(i) |= addWords(i); i += 1 }
+            graft.functions.ProbFilterOps.serializeBloom(nh, nb, words)
+          })
         }
-      }
-    } finally newRows.unpersist()
+    }
   }
 
   /** Z-value sort expression over `cols`: each column scales linearly from

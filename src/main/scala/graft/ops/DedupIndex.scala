@@ -10,15 +10,16 @@ import graft.core.{Fetch, Publish}
   * detection — the rolling-ingest shape of [[Dedup.minHashLsh]]: a 100 TB
   * corpus is shingled/banded ONCE into a saved index, and each day's new
   * batch dedups against it by joining the batch's bands into the stored
-  * buckets — O(batch + collisions) work per increment, the corpus text is
-  * never re-read (cf. the reference's append-only publish model,
-  * s3parq/publish_parq.py, which has no dedup at all).
+  * buckets — O(batch + collisions) shuffle and compute per increment, the
+  * corpus text is never re-read (cf. the reference's append-only publish
+  * model, s3parq/publish_parq.py, which has no dedup at all).
   *
   * Layout under `root` (both stores are ordinary graft datasets, so every
   * fetch/listing/compaction tool works on them):
-  *  - `bands/`   — (id, bhash, band) partitioned BY BAND: a batch's
-  *    band-bucket probe join prunes to matching band partitions, and the
-  *    shuffle key (band, bhash) is exactly the layout key;
+  *  - `bands/`   — (id, bhash, band) partitioned by band. A batch's docs
+  *    hash into every band, so the layout prunes no probe; the probe is
+  *    pruned by a semi-join of the stored bands to the (band, bhash)
+  *    buckets the batch touches, before any shuffle of the store;
   *  - `shingles/` — (id, sh): each doc's distinct word n-grams, kept so
   *    candidate verification is exact n-gram Jaccard WITHOUT touching the
   *    corpus (grams are stored as strings for oracle-exactness; a
@@ -29,12 +30,14 @@ import graft.core.{Fetch, Publish}
   *    [[dedupBatch]] read them from here rather than trusting call-site
   *    arguments to stay in sync.
   *
-  * Scale notes: the probe join ships only (id, band, bhash) scalars;
-  * shingle arrays join back for surviving candidates only (the
-  * [[Dedup.minHashLsh]] discipline); over-populated buckets (boilerplate
-  * collisions) are dropped by the same `maxBucket` guard, counted over
-  * store ∪ batch so a bucket that crosses the cap across increments still
-  * caps.
+  * Scale notes: the probe join ships only (id, band, bhash) scalars of
+  * the touched buckets; stored shingle arrays are read back only for ids
+  * in those buckets (the [[Dedup.minHashLsh]] discipline); over-populated
+  * buckets (boilerplate collisions) are dropped by the same `maxBucket`
+  * guard, counted over store ∪ batch so a bucket that crosses the cap
+  * across increments still caps. [[append]] and [[dedupBatch]] shingle
+  * and band a batch once per call: one action materialises both, and
+  * every later branch and write reads that checkpoint.
   */
 object DedupIndex {
 
@@ -68,23 +71,44 @@ object DedupIndex {
     Params(field("numHashes"), field("bands"), field("shingleSize"))
   }
 
-  /** (id, sh) + (id, bhash, band) for a document frame under `p`. */
-  private def shingleAndBand(docs: DataFrame, idCol: String, textCol: String,
-                             p: Params): (DataFrame, DataFrame) = {
+  /** (id, sh) for a document frame under `p`. */
+  private def shingled(docs: DataFrame, idCol: String, textCol: String,
+                       p: Params): DataFrame =
     // the shingle kernel declares containsNull=false, but parquet reads
     // arrays back element-nullable — publish the nullable form so the
     // store's recorded schema matches what fetch re-reads
     // shingle + banding is the CPU-heavy kernel: spread a narrow input
     // (identity at real scale, guide §2.5)
-    val shingled = Spread.forCompute(docs.select(col(idCol), col(textCol)), col(idCol))
+    Spread.forCompute(docs.select(col(idCol), col(textCol)), col(idCol))
       .select(col(idCol).as("id"),
       Dedup.shingles(col(textCol), p.shingleSize)
         .cast(org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.StringType, containsNull = true)).as("sh"))
-    val banded = shingled.select(col("id"),
-      posexplode(graft.functions.SketchFunctions.minHashBands(
-        col("sh"), p.numHashes, p.bands)).as(Seq("band", "bhash")))
-    (shingled, banded)
+
+  /** The band hashes of an (id, sh) frame's `sh` under `p`. */
+  private def bandHashes(p: Params): Column =
+    graft.functions.SketchFunctions.minHashBands(col("sh"), p.numHashes, p.bands)
+
+  /** (id, band, bhash): one row per element of the band-hash array `bh`. */
+  private def bandRows(df: DataFrame, bh: Column): DataFrame =
+    df.select(col("id"), posexplode(bh).as(Seq("band", "bhash")))
+
+  /** `body` over `df` materialised once ([[Publish.materialised]]) and
+    * its row count, observed by the same action.
+    */
+  private def materialised[T](df: DataFrame)(body: (DataFrame, Long) => T): T =
+    Publish.materialised(df, Seq(count(lit(1)).as("rows"))) { (cp, observed) =>
+      body(cp, observed("rows").asInstanceOf[Long])
+    }
+
+  /** `df` hinted for broadcast when its `rows` rows of about `rowBytes`
+    * each fit under spark.sql.autoBroadcastJoinThreshold; otherwise the
+    * join is left to the planner. `rows` is a count the materialising
+    * action already made, so the decision costs no action.
+    */
+  private def broadcastIfSmall(df: DataFrame, rows: Long, rowBytes: Int): DataFrame = {
+    val limit = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (limit > 0 && rows * rowBytes <= limit) broadcast(df) else df
   }
 
   /** Build the index over the current corpus (overwrites any prior). */
@@ -92,58 +116,89 @@ object DedupIndex {
             idCol: String = "doc_id", textCol: String = "text",
             numHashes: Int = 64, bands: Int = 16, shingleSize: Int = 3): Unit = {
     val p = Params(numHashes, bands, shingleSize)
-    val (shingled, banded) = shingleAndBand(docs, idCol, textCol, p)
-    Publish.publish(spark, banded, s"$root/bands", Seq("band"))
-    Publish.publish(spark, shingled, s"$root/shingles", Nil)
+    val sh = shingled(docs, idCol, textCol, p)
+    Publish.publish(spark, bandRows(sh, bandHashes(p)), s"$root/bands", Seq("band"))
+    Publish.publish(spark, sh, s"$root/shingles", Nil)
     writeParams(spark, root, p)
   }
 
-  /** Fold a (deduped) batch into the index — O(batch) work. */
+  /** Fold a (deduped) batch into the index — O(batch) work; an empty
+    * batch is a no-op.
+    */
   def append(spark: SparkSession, docs: DataFrame, root: String,
              idCol: String = "doc_id", textCol: String = "text"): Unit = {
     val p = params(spark, root)
-    val (shingled, banded) = shingleAndBand(docs, idCol, textCol, p)
-    Publish.publish(spark, banded, s"$root/bands", Seq("band"), mode = "append")
-    Publish.publish(spark, shingled, s"$root/shingles", Nil, mode = "append")
+    materialised(shingled(docs, idCol, textCol, p).withColumn("bh", bandHashes(p))) {
+      (sh, n) =>
+        if (n > 0) {
+          Publish.publish(spark, bandRows(sh, col("bh")), s"$root/bands", Seq("band"),
+            mode = "append")
+          Publish.publish(spark, sh.drop("bh"), s"$root/shingles", Nil, mode = "append")
+        }
+    }
   }
 
   /** Near-duplicate pairs touching the new batch: batch-vs-corpus AND
     * batch-vs-batch, exact-Jaccard-verified, (id_a, id_b, jaccard) with
     * id_a < id_b and jaccard ≥ threshold. Corpus-internal pairs are
     * never recomputed (they were the previous increments' output). The
-    * batch's ids must be disjoint from the corpus's.
+    * batch's ids must be disjoint from the corpus's. Computed eagerly: the
+    * result is a local checkpoint of the verified pairs, so the other
+    * checkpoints the call makes are dropped before it returns.
     */
   def dedupBatch(spark: SparkSession, root: String, batch: DataFrame,
                  idCol: String = "doc_id", textCol: String = "text",
                  threshold: Double = 0.8, maxBucket: Int = 1000): DataFrame = {
     val p = params(spark, root)
-    val (newShingled, newBanded) = shingleAndBand(batch, idCol, textCol, p)
-    val stored = Fetch.fetch(spark, s"$root/bands")
-      .select(col("id"), col("band"), col("bhash"))
-    // one bucket join: batch side × (store ∪ batch) side — corpus-corpus
-    // pairs are structurally impossible, not filtered after the fact
-    val probeSide = stored.unionByName(newBanded.select("id", "band", "bhash"))
     val keys = Seq("band", "bhash")
-    // skew guard over the COMBINED bucket population
-    val over = probeSide.groupBy(keys.map(col): _*).count()
-      .where(col("count") > maxBucket).select(keys.map(col): _*)
-    val a = newBanded.join(broadcast(over), keys, "left_anti")
-      .select(col("band"), col("bhash"), col("id").as("raw_a"))
-    val b = probeSide.join(broadcast(over), keys, "left_anti")
-      .select(col("band"), col("bhash"), col("id").as("raw_b"))
-    val pairs = a.join(b, keys)
-      .where(col("raw_a") =!= col("raw_b"))
-      .select(least(col("raw_a"), col("raw_b")).as("id_a"),
-        greatest(col("raw_a"), col("raw_b")).as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    // verification shingles: corpus side from the store, batch side fresh
-    val lookup = Fetch.fetch(spark, s"$root/shingles").select(col("id"), col("sh"))
-      .unionByName(newShingled)
-    Dedup.jaccardVerify(
-      pairs
-        .join(lookup.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-        .join(lookup.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b"),
-      threshold)
+    materialised(shingled(batch, idCol, textCol, p).withColumn("bh", bandHashes(p))) {
+      (sh, docs) =>
+        val newBanded = bandRows(sh, col("bh"))
+        // only the buckets the batch touches can pair with it: the stored
+        // bands are pruned to those (an int + a long per key) before any
+        // shuffle, and the pruned store ∪ the batch is the one probe side
+        // both branches below read
+        val probe = Fetch.fetch(spark, s"$root/bands")
+          .select(col("id"), col("band"), col("bhash"))
+          .join(broadcastIfSmall(newBanded.select(keys.map(col): _*), docs * p.bands, 12),
+            keys, "left_semi")
+          .unionByName(newBanded)
+        materialised(probe) { (probeSide, _) =>
+          // one bucket join: batch side × (store ∪ batch) side —
+          // corpus-corpus pairs are structurally impossible, not filtered
+          // after the fact. Skew guard over the COMBINED bucket population:
+          // every bucket a pair can come from is touched, so its count
+          // here is exact.
+          val over = probeSide.groupBy(keys.map(col): _*).count()
+            .where(col("count") > maxBucket).select(keys.map(col): _*)
+          val a = newBanded.join(broadcast(over), keys, "left_anti")
+            .select(col("band"), col("bhash"), col("id").as("raw_a"))
+          val b = probeSide.join(broadcast(over), keys, "left_anti")
+            .select(col("band"), col("bhash"), col("id").as("raw_b"))
+          val candidates = a.join(b, keys)
+            .where(col("raw_a") =!= col("raw_b"))
+            .select(least(col("raw_a"), col("raw_b")).as("id_a"),
+              greatest(col("raw_a"), col("raw_b")).as("id_b"))
+            .dropDuplicates("id_a", "id_b")
+          // verification shingles (corpus side from the store, batch side
+          // from the checkpoint) are read back for candidate ids only;
+          // small pair sets are broadcast to them instead of shuffling
+          // shingle arrays. The verified pairs get a checkpoint of their
+          // own, so this call's other checkpoints can be dropped.
+          materialised(candidates) { (pairs, pairRows) =>
+            val ids = pairs.select(col("id_a").as("id"))
+              .union(pairs.select(col("id_b").as("id")))
+            val lookup = Fetch.fetch(spark, s"$root/shingles").select(col("id"), col("sh"))
+              .unionByName(sh.drop("bh"))
+              .join(broadcastIfSmall(ids, 2 * pairRows, 8), Seq("id"), "left_semi")
+            Dedup.jaccardVerify(
+              broadcastIfSmall(pairs, pairRows, 16)
+                .join(lookup.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
+                .join(lookup.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b"),
+              threshold).localCheckpoint()
+          }
+        }
+    }
   }
 
   // ------------------------------------------------------- SimHash modality
@@ -195,13 +250,16 @@ object DedupIndex {
     writeMarker(spark, root, SimHashParamsName, """{"kind":"simhash"}""")
   }
 
-  /** Fold a batch's signatures into the SimHash index — O(batch). */
+  /** Fold a batch's signatures into the SimHash index — O(batch); an
+    * empty batch is a no-op.
+    */
   def appendSimHash(spark: SparkSession, docs: DataFrame, root: String,
                     idCol: String = "doc_id", textCol: String = "text",
                     sig: Option[Column] = None): Unit = {
     requireMarker(spark, root, SimHashParamsName, "SimHash")
-    Publish.publish(spark, simHashed(docs, idCol, textCol, sig),
-      s"$root/simhash", Nil, mode = "append")
+    materialised(simHashed(docs, idCol, textCol, sig)) { (sims, n) =>
+      if (n > 0) Publish.publish(spark, sims, s"$root/simhash", Nil, mode = "append")
+    }
   }
 
   /** SimHash near-dup pairs touching the batch: batch-vs-corpus and
@@ -289,13 +347,18 @@ object DedupIndex {
       s"""{"kind":"embedding","planes":$planes,"tables":$tables}""")
   }
 
-  /** Fold a batch's vectors + signatures into the index — O(batch). */
+  /** Fold a batch's vectors + signatures into the index — O(batch); a
+    * batch with no non-zero vector is a no-op.
+    */
   def appendEmbedding(spark: SparkSession, embs: DataFrame, root: String,
                       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     val p = embParams(spark, root)
-    val base = embBase(embs, idCol, vecCol)
-    Publish.publish(spark, embSigs(base, p), s"$root/vecsigs", Seq("t"), mode = "append")
-    Publish.publish(spark, base, s"$root/vectors", Nil, mode = "append")
+    materialised(embBase(embs, idCol, vecCol)) { (base, n) =>
+      if (n > 0) {
+        Publish.publish(spark, embSigs(base, p), s"$root/vecsigs", Seq("t"), mode = "append")
+        Publish.publish(spark, base, s"$root/vectors", Nil, mode = "append")
+      }
+    }
   }
 
   /** Embedding near-dup pairs touching the batch: cosine ≥ threshold,

@@ -180,8 +180,8 @@ object EventStream {
     * at-least-once source: each micro-batch lands via
     * [[graft.core.Publish.publishDedupAppend]], so a replayed batch (the
     * normal failure-recovery path of any streaming source) re-appends
-    * nothing — the bloom of existing keys proves most rows new without a
-    * join, and the exact anti-join absorbs replays and false positives.
+    * nothing — one null-safe anti-join against the stored keys absorbs
+    * replays exactly.
     *
     * Compared to [[streamToDataset]] (raw file sink: at-least-once, dedup
     * left to readers), this trades per-batch key-scan work for a dataset
@@ -244,22 +244,12 @@ object EventStream {
         events.schema.fields.map(f => (f.name, f.dataType)).toSeq,
         "stream schema does not match the dataset's recorded schema")
     }
-    // Bloom state carried across batches: after the first batch, appends
-    // skip the per-batch existing-key count + filter rebuild (which would
-    // otherwise make ingest cost grow with dataset size); the dedup-append
-    // folds each batch's new keys back into the carried filter. Lost on
-    // restart — the next first batch rebuilds it at the then-right size.
-    var bloom: Option[Array[Byte]] = None
     events.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val (_, state) = graft.core.Publish.publishDedupAppendWithState(
-            spark, batch, root, keyCols,
-            firstCreatePartitions = partitions, knownBloom = bloom)
-          bloom = Some(state)
-        }
-        ()
+        if (!batch.isEmpty)
+          graft.core.Publish.publishDedupAppend(spark, batch, root, keyCols,
+            firstCreatePartitions = partitions): Unit
       }
       .start()
   }

@@ -58,6 +58,18 @@ object shim {
   def cloneSession(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
 
+  /** Drop the blocks of `df`'s local checkpoint now rather than when a GC
+    * finds the RDD unreachable. `RDD.unpersist` would do the same but
+    * warn that the truncated lineage cannot be recomputed — which is the
+    * point of dropping it.
+    */
+  def dropLocalCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.sparkContext.unpersistRDD(r.rdd.id, blocking = false)
+      case _ =>
+    }
+
   /** Register a function builder on an EXISTING session's registry (the
     * extensions path only applies at session construction).
     */

@@ -7,8 +7,8 @@ import org.scalacheck.Prop.forAll
 import graft.core.{Fetch, Publish}
 
 /** Property-fuzz of idempotent append: ANY sequence of overlapping (and
-  * re-delivered) batches, applied with or without carried bloom state and
-  * under aggressive fpp, must land exactly the distinct union of keys —
+  * re-delivered) batches, applied with or without carried bloom state
+  * (under aggressive fpp), must land exactly the distinct union of keys —
   * the invariant the exactly-once streaming sink rests on.
   */
 object DedupAppendFuzzProperties extends Properties("DedupAppend") {
@@ -52,7 +52,7 @@ object DedupAppendFuzzProperties extends Properties("DedupAppend") {
             Seq("id"), fpp, firstCreatePartitions = Seq("p"), knownBloom = state)
           state = Some(s)
         } else {
-          Publish.publishDedupAppend(spark, df(lo, hi), root, Seq("id"), fpp,
+          Publish.publishDedupAppend(spark, df(lo, hi), root, Seq("id"),
             firstCreatePartitions = Seq("p"))
         }
       }

@@ -1,15 +1,18 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.TimeLimits
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
 import graft.core.{Fetch, Publish}
+import graft.functions.ProbFilters
 
 /** Idempotent append: re-delivered rows never duplicate, genuinely new
-  * rows always land — including the bloom-false-positive path, which must
-  * be corrected by the exact anti-join.
+  * rows always land — also when a carried key filter's false positives
+  * claim them seen — within a fixed Spark action budget.
   */
-class DedupAppendSpec extends AnyFunSuite {
+class DedupAppendSpec extends AnyFunSuite with TimeLimits {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -43,10 +46,15 @@ class DedupAppendSpec extends AnyFunSuite {
   test("aggressive fpp still exact: false positives corrected by the anti-join") {
     val r = fresh("fpp")
     def rows(lo: Long, hi: Long) = spark.range(lo, hi).toDF("id")
-    Publish.publishDedupAppend(spark, rows(0, 1000), r, Seq("id"))
-    // fpp 0.5: about half the new keys will falsely probe "seen" and must
-    // survive through the exact path
-    Publish.publishDedupAppend(spark, rows(500, 2000), r, Seq("id"), fpp = 0.5)
+    val (_, state) = Publish.publishDedupAppendWithState(spark, rows(0, 1000), r,
+      Seq("id"), fpp = 0.5)
+    // the carried fpp-0.5 filter falsely claims many never-stored keys
+    // seen; every one of them must still land through the exact path
+    val claimed = rows(1000, 2000)
+      .where(ProbFilters.mightContain(spark, xxhash64(col("id")), state)).count()
+    assert(claimed > 100, s"the filter should claim many new keys, claimed $claimed")
+    Publish.publishDedupAppendWithState(spark, rows(500, 2000), r, Seq("id"),
+      fpp = 0.5, knownBloom = Some(state))
     val ids = Fetch.fetch(spark, r).select("id").as[Long].collect().sorted
     assert(ids.length == 2000 && ids.head == 0L && ids.last == 1999L,
       s"got ${ids.length} rows")
@@ -108,5 +116,26 @@ class DedupAppendSpec extends AnyFunSuite {
       Seq((1L, "a", 50.0), (3L, "c", 13.0)).toDF("k1", "k2", "v"), r, Seq("k1", "k2"))
     val got = Fetch.fetch(spark, r).select("k1", "k2").as[(Long, String)].collect().toSet
     assert(got == Set((1L, "a"), (1L, "b"), (2L, "a"), (3L, "c")))
+  }
+
+  test("plain dedup-append stays within its root SQL execution budget") {
+    failAfter(120.seconds) {
+      val r = fresh("budget")
+      def rows(lo: Long, hi: Long) =
+        spark.range(lo, hi).select(col("id"), (col("id") % 4).cast("string").as("p"))
+      Publish.publishDedupAppend(spark, rows(0, 200), r, Seq("id"),
+        firstCreatePartitions = Seq("p"))
+      // one action materialises the new rows and observes their count and
+      // sizing, then the write; nothing new stops after the first
+      val (files, appending) = SqlExecutions.countDuring(spark)(
+        Publish.publishDedupAppend(spark, rows(150, 300), r, Seq("id")))
+      val (none, redelivery) = SqlExecutions.countDuring(spark)(
+        Publish.publishDedupAppend(spark, rows(0, 300), r, Seq("id")))
+      info(s"appending=$appending redelivery=$redelivery")
+      assert(files.nonEmpty && none.isEmpty)
+      assert(appending <= 2 && redelivery <= 1, s"appending=$appending redelivery=$redelivery")
+      val ids = Fetch.fetch(spark, r).select("id").as[Long].collect().sorted
+      assert(ids.toSeq == (0L until 300L))
+    }
   }
 }

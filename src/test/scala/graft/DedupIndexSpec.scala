@@ -2,14 +2,18 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.TimeLimits
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
+import graft.core.Fetch
 import graft.ops.{Dedup, DedupIndex}
 
 /** Incremental near-dup via the persisted band index: equivalence with the
-  * one-shot operator, rolling appends, and the params pin.
+  * one-shot operator, rolling appends, the params pin, the skew guard of
+  * the pruned probe and empty batches.
   */
-class DedupIndexSpec extends AnyFunSuite {
+class DedupIndexSpec extends AnyFunSuite with TimeLimits {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -134,5 +138,58 @@ class DedupIndexSpec extends AnyFunSuite {
         Seq((200L, twin2)).toDF("vec_id", "embedding"), threshold = 0.9)
       .as[(Long, Long, Double)].collect().toSeq
     assert(got2.map(p => (p._1, p._2)) == Seq((101L, 200L)), s"$got2")
+  }
+
+  test("skew guard counts store ∪ batch for the buckets the probe touches") {
+    failAfter(120.seconds) {
+      val root = TestSpark.tmpDir("dedup_index_skew")
+      val boiler = "identical boilerplate banner repeated on every mirror of the page"
+      // each bucket of the boilerplate text holds 2 stored docs: under the
+      // cap alone, over it once the batch's copy joins them
+      DedupIndex.build(spark, df(corpusRows ++ Seq(6L -> boiler, 7L -> boiler)), root,
+        numHashes = 64, bands = 32)
+      val got = DedupIndex.dedupBatch(spark, root,
+          df(batch1Rows.filterNot(_._1 == 102L) :+ (104L -> boiler)),
+          threshold = 0.5, maxBucket = 2)
+        .as[(Long, Long, Double)].collect().toSeq
+      assert(!got.exists { case (a, b, _) => a == 104L || b == 104L },
+        s"pairs of the over-populated buckets must be suppressed: $got")
+      assert(got.exists { case (a, b, _) => a == 1L && b == 101L },
+        s"a near-dup in an ordinary bucket must still surface: $got")
+    }
+  }
+
+  test("MinHash index: an empty batch probes to nothing and appends nothing") {
+    failAfter(120.seconds) {
+      val root = TestSpark.tmpDir("dedup_index_empty")
+      DedupIndex.build(spark, df(corpusRows.take(2)), root)
+      val empty = df(Nil)
+      assert(DedupIndex.dedupBatch(spark, root, empty).count() == 0)
+      DedupIndex.append(spark, empty, root)
+      assert(Fetch.fetch(spark, s"$root/shingles").count() == 2)
+      DedupIndex.append(spark, df(batch1Rows), root)
+      assert(Fetch.fetch(spark, s"$root/shingles").count() == 5)
+    }
+  }
+
+  test("SimHash index: appending an empty batch is a no-op") {
+    failAfter(120.seconds) {
+      val root = TestSpark.tmpDir("dedup_index_simhash_empty")
+      DedupIndex.buildSimHash(spark, df(corpusRows.take(2)), root)
+      DedupIndex.appendSimHash(spark, df(Nil), root)
+      assert(Fetch.fetch(spark, s"$root/simhash").count() == 2)
+    }
+  }
+
+  test("embedding index: appending an empty batch is a no-op") {
+    failAfter(120.seconds) {
+      val root = TestSpark.tmpDir("dedup_index_embedding_empty")
+      val vecs = Seq((1L, Array(1.0, 0.0)), (2L, Array(0.0, 1.0)))
+      DedupIndex.buildEmbedding(spark, vecs.toDF("vec_id", "embedding"), root,
+        planes = 4, tables = 2)
+      DedupIndex.appendEmbedding(spark,
+        Seq.empty[(Long, Array[Double])].toDF("vec_id", "embedding"), root)
+      assert(Fetch.fetch(spark, s"$root/vectors").count() == 2)
+    }
   }
 }

@@ -17,6 +17,10 @@ quartiles, the base's quartile spread (q3 - q1), the median change and how
 many pairs the change won. A gain claim holds when the change wins at least
 9 of 10 pairs and the medians differ by more than the base's spread.
 
+With --trace both sides run with `--trace 1` and the summary covers the
+per_layer metrics of BENCHMARK.json instead, so a claim about a named layer
+is shown paired too (wins counted by each metric's `better`).
+
 Nothing under perfbench/ is modified: each run writes only the checkout's
 own .bench_build/ directory. Worktrees are removed at the end unless --keep.
 """
@@ -43,9 +47,12 @@ def add_worktree(rev, path):
     return path
 
 
-def end_to_end_metrics(checkout):
+def metric_directions(checkout, trace):
+    """{metric: better} of the end-to-end metrics, or of the per-layer
+    ones for traced runs."""
     with open(os.path.join(checkout, "BENCHMARK.json")) as f:
-        return {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
+        return {m["name"]: m["better"]
+                for m in json.load(f)["per_layer" if trace else "end_to_end"]}
 
 
 def build(checkout):
@@ -53,10 +60,11 @@ def build(checkout):
                    stdout=subprocess.DEVNULL)
 
 
-def run_once(checkout, workload, seed, seconds):
+def run_once(checkout, workload, seed, seconds, trace):
     """One benchmark run; returns its final JSON line (None when it failed)."""
     p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
-                        "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+                        "--seed", str(seed), "--seconds", str(seconds),
+                        "--trace", str(int(trace))],
                        cwd=checkout, capture_output=True, text=True)
     lines = [l for l in p.stdout.splitlines() if l.startswith("{")]
     if p.returncode != 0 or not lines:
@@ -80,7 +88,8 @@ def summarize(workload, pairs, better):
     """Per-metric lines for one workload's completed pairs."""
     out = [f"== {workload}: {len(pairs)} pairs, seeds "
            f"{','.join(str(p['seed']) for p in pairs)}"]
-    out.append(f"{'metric':<14}{'better':>7}  {'base median [q1, q3]':<36}"
+    width = max([14] + [len(n) + 2 for n in better])
+    out.append(f"{'metric':<{width}}{'better':>7}  {'base median [q1, q3]':<36}"
                f"{'change median [q1, q3]':<36}{'base IQR':>10}{'delta':>9}{'wins':>8}")
     for name, direction in better.items():
         rows = [(p["base"]["metrics"][name]["value"], p["change"]["metrics"][name]["value"])
@@ -94,7 +103,7 @@ def summarize(workload, pairs, better):
         delta = (cq[1] - bq[1]) / bq[1] if bq[1] else 0.0
         iqr = bq[2] - bq[0]
         flag = "  median gap > base IQR" if abs(cq[1] - bq[1]) > iqr else ""
-        out.append(f"{name:<14}{direction:>7}  {fmt(bq):<36}{fmt(cq):<36}"
+        out.append(f"{name:<{width}}{direction:>7}  {fmt(bq):<36}{fmt(cq):<36}"
                    f"{iqr:>10.4g}{delta:>+9.1%}{wins:>5}/{len(rows)}{flag}")
     bad = [(p["seed"], side) for p in pairs for side in ("base", "change")
            if not p[side].get("correct")]
@@ -113,6 +122,8 @@ def main():
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seeds", default="", help="comma-separated seeds, cycled (default 1..pairs)")
     ap.add_argument("--seconds", type=int, default=20)
+    ap.add_argument("--trace", action="store_true",
+                    help="run traced and summarise the per-layer metrics")
     ap.add_argument("--out", help="write every run's JSON line here (after each pair)")
     ap.add_argument("--workdir", help="parent directory of the worktrees (default: a temp dir)")
     ap.add_argument("--keep", action="store_true", help="keep the worktrees")
@@ -130,7 +141,9 @@ def main():
                 sides[side] = add_worktree(rev, os.path.join(tmp, side))
                 made.append(sides[side])
             build(sides[side])
-        better = end_to_end_metrics(sides["base"])
+        better = metric_directions(sides["base"], a.trace)
+        # the progress line shows one headline metric per side
+        headline = "spark.jobs_per_op" if a.trace else "write_p50_ms"
         results = {}
         for w in a.workload:
             pairs = []
@@ -139,10 +152,10 @@ def main():
                 order = ("base", "change") if i % 2 == 0 else ("change", "base")
                 pair = {"seed": seed, "first": order[0]}
                 for side in order:
-                    r = run_once(sides[side], w, seed, a.seconds)
+                    r = run_once(sides[side], w, seed, a.seconds, a.trace)
                     pair[side] = r or {"correct": False, "metrics": {}}
                 print(f"[ab_pairs] {w} pair {i + 1}/{a.pairs} seed {seed}: " + "  ".join(
-                    f"{s} write_p50_ms={pair[s]['metrics'].get('write_p50_ms', {}).get('value')}"
+                    f"{s} {headline}={pair[s]['metrics'].get(headline, {}).get('value')}"
                     for s in ("base", "change")), file=sys.stderr, flush=True)
                 pairs.append(pair)
                 results[w] = pairs
