@@ -170,7 +170,9 @@ object BloomIndex {
     * unprunable, which is the conservative default.
     */
   def appendFiles(spark: SparkSession, root: String, newFiles: Seq[String]): Unit = {
-    if (newFiles.isEmpty) return
+    // existence checked BEFORE the lock: a write to a root without a bloom
+    // index (a mutation, an append) must never wait on the dataset lock
+    if (newFiles.isEmpty || params(spark, root).isEmpty) return
     DatasetLock.withLock(spark, root) {
       params(spark, root).foreach { p =>
         val meta = requireMeta(spark, root)

@@ -16,30 +16,45 @@ final case class MutationResult(version: Int,
 /** Row-level mutations — DELETE / UPDATE / MERGE — on versioned graft
   * datasets, Delta-Lake-shaped: copy-on-write at FILE granularity.
   *
-  * Every mutation runs in three phases:
+  * The five copy-on-write mutations ([[deleteWhere]], [[replaceWhere]],
+  * [[updateWhere]], [[applyChanges]], [[merge]]) check their inputs, then
+  * run ONE skeleton ([[copyOnWrite]]) in four phases:
   *   1. **Locate** — one distributed scan finds the distinct set of files
   *      that contain at least one affected row (`_metadata.file_path`,
   *      column-pruned to the predicate/key columns). On a dataset where
   *      the predicate touches 1 % of files, 99 % of the data is never
   *      read again, let alone rewritten — this is what makes a
   *      row-level delete on 100 TB an O(affected data) operation.
-  *   2. **Rewrite** — only the affected files are re-read; surviving /
-  *      updated / merged rows are written as FRESH files through
-  *      publish's file-sizing path (physical writes never delete).
-  *   3. **Commit** — one `rewrite` log entry atomically swaps the
-  *      affected files for the new ones. Readers of older versions are
-  *      undisturbed; a crash before the commit leaves the previous
-  *      version fully readable and the new files invisible; `vacuum`
-  *      reclaims replaced files once history allows.
+  *   2. **Read affected** — only the affected files are re-read, deletion
+  *      vectors applied, with their row ids when the dataset tracks rows.
+  *   3. **Rewrite** — the path's own function turns those rows into the
+  *      replacement: survivors, updated rows, an upsert by key.
+  *   4. **Commit** — [[writeAndCommit]], the tail every versioned rewrite
+  *      shares, writes the replacement as FRESH files (physical writes
+  *      never delete) and lands one `rewrite` log entry that atomically
+  *      swaps the affected files for the new ones. Readers of older
+  *      versions are undisturbed; a crash before the commit leaves the
+  *      previous version fully readable and the new files invisible;
+  *      `vacuum` reclaims replaced files once history allows.
+  *
+  * The copy-on-write action budget: the locate collect, then the write's
+  * sizing sample and the write itself — 3 actions for DELETE/UPDATE. The
+  * input checks add theirs: replaceWhere's stray-row probe (and, scoped
+  * to partitions, a path-resolved locate in place of the scan), MERGE's
+  * source-key uniqueness check, APPLY CHANGES' op check plus uniqueness
+  * check — 4 for replaceWhere and MERGE, 5 for APPLY CHANGES. A dataset
+  * with CHECK constraints adds the constraint pass, one with a stats
+  * index its index read and maintenance.
   *
   * The deletion-vector variants ([[deleteWhereDv]], [[updateWhereDv]],
   * [[mergeDv]]) have a fixed action budget: ONE locate-and-DV-write
   * action, whose observed metrics (`Dataset.observe`) carry the covered
   * files and, for UPDATE, the row count and write sizing of the updated
-  * copies — then, for UPDATE/MERGE, one data write. MERGE's source-key
-  * uniqueness check is its one extra action and observes the source's
-  * row count and sizing. A DV lookup the session has not built yet (the
-  * first read of a new DV set) adds one action.
+  * copies — then, for UPDATE/MERGE, one data write through the same
+  * [[writeAndCommit]] tail. MERGE's source-key uniqueness check is its
+  * one extra action and observes the source's row count and sizing. A DV
+  * lookup the session has not built yet (the first read of a new DV set)
+  * adds one action.
   *
   * Concurrency is OPTIMISTIC at file granularity (the Delta conflict-
   * detection shape, since r15): mutations take NO lock — each computes
@@ -50,7 +65,8 @@ final case class MutationResult(version: Int,
   * file sets both succeed; overlapping ones lose loudly with
   * `ConcurrentModificationException` — never a silent clobber. At 100 TB
   * with many writers this removes the per-table mutation throughput
-  * ceiling lock-serialization imposed.
+  * ceiling lock-serialization imposed. (Maintaining a stats or bloom
+  * index is the one serialized step, and only on an indexed dataset.)
   *
   * The reference (s3parq) can only clobber or append whole partition
   * trees; row-level semantics are part of graft's beyond-the-reference
@@ -60,21 +76,25 @@ object Mutations {
 
   private val FileCol = "_graft_file"
   private val RowIdxCol = "_graft_row_index"
+  private val RowIdCol = Versions.RowIdCol
+
+  /** The snapshot a mutation computes against: its version, metadata and
+    * live DV refs, and its rows carrying the per-row source-file handle.
+    */
+  private final case class Base(version: Int, meta: DatasetMeta, dvs: Seq[DvRef],
+                                rows: DataFrame)
 
   /** Latest snapshot read with the per-row source-file handle, DELETION
     * VECTORS APPLIED — a mutation must never locate (or resurrect) a row
-    * an earlier delete_dv already removed. Also returns the snapshot's
-    * live DV refs so rewrite legs re-reading affected files apply them
-    * too.
-    */
-  /** `rowIdBases`: when set, the snapshot carries each row's stable id as
+    * an earlier delete_dv already removed. The live DV refs ride along so
+    * rewrite legs re-reading affected files apply them too.
+    * `rowIdBases`: when set, the snapshot carries each row's stable id as
     * [[Versions.RowIdCol]] (row tracking — DV-mode mutations thread the
     * ids into their replacement copies).
     */
   private def snapshotWithPath(spark: SparkSession, root: String,
                                withRowIndex: Boolean = false,
-                               rowIdBases: Option[Map[String, Long]] = None)
-      : (Int, DatasetMeta, Seq[DvRef], DataFrame) = {
+                               rowIdBases: Option[Map[String, Long]] = None): Base = {
     val latest = Versions.latestVersion(spark, root).getOrElse(throw
       new IllegalArgumentException(
         s"row-level mutations need a versioned dataset; $root has no version log"))
@@ -83,7 +103,7 @@ object Mutations {
       dvs = dvs, rowIndexCol = if (withRowIndex) Some(RowIdxCol) else None,
       keepRowId = rowIdBases.map(_ => RowIdCol),
       rowIdBases = rowIdBases.getOrElse(Map.empty))
-    (latest, meta, dvs, df)
+    Base(latest, meta, dvs, df)
   }
 
   /** The root-relative files containing at least one row of `affected`
@@ -126,19 +146,78 @@ object Mutations {
       if (affected.forall(bases.contains)) Some(bases) else None
     }
 
-  private val RowIdCol = Versions.RowIdCol
-
-  /** One key tuple of `df` occurring more than once, with its count (a
-    * key column may itself be named `count`: the aggregate is aliased).
+  /** `df` holds each `keyCols` tuple at most once — else fail naming one
+    * duplicate with its count (a key column may itself be named `count`:
+    * the aggregate is aliased).
     */
-  private def duplicateKey(df: DataFrame, keyCols: Seq[String]): Option[org.apache.spark.sql.Row] =
-    df.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("__graft_n"))
+  private def requireUniqueKeys(what: String, df: DataFrame, keyCols: Seq[String]): Unit = {
+    val dup = df.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("__graft_n"))
       .where(col("__graft_n") > 1).limit(1).collect().headOption
+    require(dup.isEmpty,
+      s"$what is not unique on (${keyCols.mkString(",")}): e.g. ${dup.getOrElse("")}")
+  }
+
+  /** The source contract of every path that takes rows in: the key
+    * columns exist on both sides, and `source` carries every column of
+    * `schema` and nothing else besides `passThrough`. Returns `source` in
+    * `schema`'s order with its values cast to the declared types (ANSI
+    * catches a lossy downcast at runtime), `passThrough` appended.
+    */
+  private def normalised(what: String, source: DataFrame, schema: StructType,
+                         keyCols: Seq[String] = Nil,
+                         passThrough: Seq[String] = Nil): DataFrame = {
+    keyCols.foreach { k =>
+      require(schema.fieldNames.contains(k), s"key column $k is not a dataset column")
+      require(source.columns.contains(k), s"key column $k missing from source")
+    }
+    val missing = schema.fieldNames.filterNot(source.columns.contains)
+    val extra = source.columns.filterNot(c =>
+      schema.fieldNames.contains(c) || passThrough.contains(c))
+    require(missing.isEmpty, s"$what is missing dataset columns: ${missing.mkString(",")}")
+    require(extra.isEmpty, s"$what carries columns the dataset lacks: ${extra.mkString(",")}")
+    source.select(schema.fields.toIndexedSeq.map(f =>
+      col(f.name).cast(f.dataType).as(f.name)) ++ passThrough.map(col): _*)
+  }
+
+  /** The UPDATE projection over `meta`'s columns: each assigned column
+    * takes its expression cast to the declared type — only on rows where
+    * `onlyWhere` is TRUE, when given — and the others pass through.
+    * Unknown and partition columns are rejected (moving rows between
+    * partitions is a delete+insert the caller should express as such).
+    */
+  private def updatedColumns(what: String, meta: DatasetMeta,
+                             assignments: Map[String, Column],
+                             onlyWhere: Option[Column]): Seq[Column] = {
+    val bad = assignments.keySet.filterNot(meta.schema.fieldNames.contains)
+    require(bad.isEmpty, s"assignment to unknown columns: ${bad.mkString(",")}")
+    val part = assignments.keySet.filter(meta.partitions.contains)
+    require(part.isEmpty,
+      s"cannot assign partition columns ${part.mkString(",")} in $what")
+    meta.schema.fields.toIndexedSeq.map { f =>
+      assignments.get(f.name).fold(col(f.name)) { e =>
+        val v = e.cast(f.dataType)
+        onlyWhere.fold(v)(p => when(p <=> lit(true), v).otherwise(col(f.name))).as(f.name)
+      }
+    }
+  }
+
+  /** The snapshot rows whose key appears in `keys` — MERGE's and APPLY
+    * CHANGES' locate and read set.
+    */
+  private def keyed(keys: DataFrame, keyCols: Seq[String]): DataFrame => DataFrame =
+    _.join(keys.select(keyCols.map(col): _*), keyCols, "left_semi")
 
   /** Deterministic text of a predicate for the commitInfo surface (the
     * Column's own rendering — advisory metadata, never re-parsed).
     */
   private def predSql(c: Column): String = c.toString
+
+  /** Test seam (same shape as [[Publish.postWriteHook]]): runs after a
+    * mutation's locate/rewrite work and just before its commit — the
+    * stale-read window the read-set OCC specs hold open to land a
+    * deterministic concurrent commit.
+    */
+  private[graft] var preCommitHook: () => Unit = () => ()
 
   /** READ-SET half of the OCC guard, built per mutation and evaluated by
     * [[Versions.commit]] against each concurrent commit's ADDED files:
@@ -152,74 +231,163 @@ object Mutations {
     * without the concurrent DVs is conservative (a DV'd-out matching row
     * still conflicts) — OCC retries re-run the mutation, never lose data.
     */
-  /** Test seam (same shape as [[Publish.postWriteHook]]): runs after a
-    * mutation's locate/rewrite work and just before its commit — the
-    * stale-read window the read-set OCC specs hold open to land a
-    * deterministic concurrent commit.
-    */
-  private[graft] var preCommitHook: () => Unit = () => ()
-
   private def addedReadGuard(spark: SparkSession, root: String,
                              meta: DatasetMeta,
                              inReadSet: DataFrame => DataFrame)
-      : Seq[String] => Option[String] =
-    added => {
+      : Option[Seq[String] => Option[String]] =
+    Some(added => {
       val hit = inReadSet(Versions.readFiles(spark, root, added, meta))
         .limit(1).collect()
       if (hit.isEmpty) None
       else Some(s"e.g. ${hit.head}")
-    }
+    })
 
-  private def rewriteCommit(spark: SparkSession, root: String,
-                            meta: DatasetMeta, replacement: DataFrame,
-                            removedRel: Seq[String],
-                            schemaEvolved: Boolean = false,
-                            opInfo: Map[String, String] = Map.empty,
-                            baseVersion: Option[Int] = None,
-                            readConflict: Option[Seq[String] => Option[String]] = None): MutationResult = {
-    // UPDATE/MERGE-produced rows must honor the table's CHECK constraints
-    // (survivor rows re-validate too — they were valid, and the combined
-    // pass only scans the affected-file subset being rewritten)
-    Versions.enforceConstraints(spark, root, replacement)
-    // A name-mapped dataset's replacement files are written under the
-    // mapping's PHYSICAL names, like every other live file.
-    val physReplacement =
-      if (meta.colMap.isEmpty) replacement
-      else replacement.select(replacement.schema.fieldNames.toIndexedSeq.map(n =>
+  /** The write-and-commit tail of EVERY versioned rewrite — the
+    * copy-on-write mutations, the DV-backed UPDATE/MERGE and OPTIMIZE's
+    * small-file pack — and the one place that decides how a rewrite's
+    * files are written, indexed and committed:
+    *   - `rows` are first checked against the table's CHECK constraints
+    *     when `validate` (UPDATE/MERGE-produced rows must honor them;
+    *     survivors re-validate too, the pass only scans the rewritten
+    *     subset). OPTIMIZE moves committed rows and skips it;
+    *   - a name-mapped dataset's files are written under the mapping's
+    *     PHYSICAL names, like every other live file;
+    *   - the files land through the DIRECT-WRITE protocol (unique job-id
+    *     names, files reported by the writer itself): concurrent OCC
+    *     writers never discover each other's uncommitted bytes through a
+    *     listing, and no listing runs. An empty `rows` (a delete that
+    *     emptied its files) writes nothing — the write's own sizing
+    *     sample answers emptiness, or `sizing`, when an earlier action
+    *     observed it over `rows`, replaces that sample;
+    *   - the write maintains the stats index (for the columns it covers)
+    *     and the bloom index once for the new files, before the commit;
+    *   - [[preCommitHook]] runs, then ONE `kind` entry commits the new
+    *     files, removes `removed` and records `dvs`, validated against
+    *     `baseVersion` and, when given, the `readConflict` read set.
+    * `schemaEvolved`: `meta` is an evolving merge's widened schema, which
+    * the dataset's recorded one does not match yet. Returns the result
+    * and the new files' absolute paths.
+    */
+  private[core] def writeAndCommit(spark: SparkSession, root: String,
+                                   meta: DatasetMeta, rows: DataFrame, kind: String,
+                                   opInfo: Map[String, String], baseVersion: Int,
+                                   removed: Seq[String] = Nil, dvs: Seq[DvRef] = Nil,
+                                   sizing: Option[Publish.WriteSizing] = None,
+                                   schemaEvolved: Boolean = false,
+                                   validate: Boolean = true,
+                                   readConflict: Option[Seq[String] => Option[String]] = None)
+      : (MutationResult, Seq[String]) = {
+    if (validate) Versions.enforceConstraints(spark, root, rows)
+    val physRows =
+      if (meta.colMap.isEmpty) rows
+      else rows.select(rows.schema.fieldNames.toIndexedSeq.map(n =>
         col(n).as(meta.physName(n))): _*)
-    // emptyOk: "the delete wiped every row of the affected files" used to
-    // be probed by a separate replacement.isEmpty — one full extra
-    // evaluation of the rewrite join per mutation; the publish's own
-    // sizing sample now answers emptiness for free (Nil = removal-only)
     val newFiles =
-      Publish.publishImpl(spark, physReplacement, root,
-        meta.partitions, "append", Nil, Nil, 16, 0, Nil,
-        emptyOk = true,
+      if (sizing.exists(_.rows == 0)) Nil
+      else Publish.publishImpl(spark, physRows, root,
+        meta.partitions, "append", Nil, Nil, 16, 0,
+        statsCols = StatsIndex.indexedColumns(spark, root),
         // physical names intentionally differ from the sidecar's logical
         // schema on a mapped dataset (and an evolving merge's replacement
         // carries MORE columns than the sidecar); the logical shape was
         // already validated by the snapshot read this derives from
         requireSchemaMatch = meta.colMap.isEmpty && !schemaEvolved,
-        internalRewrite = true,
-        // rewrite files land through the DIRECT-WRITE protocol (unique
-        // job-id names, files reported by the writer itself): concurrent
-        // OCC mutations must not discover each other's uncommitted bytes
-        // through a listing diff
-        directCommit = true)
-    val addedRel = Versions.relativize(spark, root, newFiles)
+        internalRewrite = true, directCommit = true, emptyOk = true, sizing = sizing)
     preCommitHook()
-    val v = Versions.commit(spark, root, "rewrite", newFiles, meta,
-      removedRel = removedRel, opInfo = opInfo, baseVersion = baseVersion,
-      readConflict = readConflict)
-    // keep the stats-skipping index covering the snapshot: if this
-    // dataset is indexed, the rewritten files get their min/max rows too
-    // (stale rows for the removed files are harmless — planning is
-    // version-log-aware). Without this, rewrites degrade those files to
-    // conservative always-scan.
-    val idxCols = StatsIndex.indexedColumns(spark, root)
-    if (idxCols.nonEmpty && newFiles.nonEmpty)
-      StatsIndex.appendFiles(spark, root, newFiles, idxCols)
-    MutationResult(v, removedRel, addedRel)
+    val v = Versions.commit(spark, root, kind, newFiles, meta,
+      removedRel = removed, dvs = dvs, opInfo = opInfo,
+      baseVersion = Some(baseVersion), readConflict = readConflict)
+    (MutationResult(v, removed, Versions.relativize(spark, root, newFiles)), newFiles)
+  }
+
+  /** The affected files' rows as a rewrite sees them: each `rows` call is
+    * a fresh read (deletion vectors applied) that carries the
+    * materialized row id when `tracked`.
+    */
+  private final class Affected(read: () => DataFrame, val tracked: Boolean) {
+    def rows: DataFrame = read()
+    def map(f: DataFrame => DataFrame): Affected = new Affected(() => f(read()), tracked)
+    /** The id column a rewritten row keeps, when tracked. */
+    def ids: Seq[Column] = if (tracked) Seq(col(RowIdCol)) else Nil
+    /** An inserted row's null id (a fresh id at read), when tracked. */
+    def freshIds: Seq[Column] =
+      if (tracked) Seq(lit(null).cast("long").as(RowIdCol)) else Nil
+  }
+
+  /** The copy-on-write skeleton (phases in the object doc):
+    *   1. locate — the distinct files holding a row of
+    *      `matching(base.rows)`, or `scoped`, files the caller resolved
+    *      from the log's paths without a scan;
+    *   2. read affected — when nothing matched and `inserts` holds no row,
+    *      the mutation is a no-op that commits nothing. Otherwise the
+    *      affected files are re-read, with their row ids when every one of
+    *      them is covered (coverage scoped to the affected files);
+    *   3. rewrite — `rewrite` turns them into the replacement rows;
+    *   4. commit — [[writeAndCommit]] swaps the affected files for the
+    *      replacement's in one `rewrite` entry, guarded by `matching` as
+    *      the OCC read set ([[addedReadGuard]]), under `base.meta`: files
+    *      that landed concurrently cannot carry an evolving merge's new
+    *      columns.
+    * `evolved`: the metadata the commit records when a merge evolved the
+    * schema.
+    */
+  private def copyOnWrite(spark: SparkSession, root: String, base: Base,
+                          matching: DataFrame => DataFrame, opInfo: Map[String, String],
+                          inserts: Option[DataFrame] = None,
+                          scoped: Option[Seq[String]] = None,
+                          evolved: Option[DatasetMeta] = None)(
+                          rewrite: Affected => DataFrame): MutationResult = {
+    val affected = scoped.getOrElse(affectedFiles(matching(base.rows)))
+    if (affected.isEmpty && inserts.forall(_.isEmpty)) MutationResult(base.version, Nil, Nil)
+    else {
+      val bases = liveBases(spark, root, base.version, affected)
+      val target = new Affected(() => Versions.readFiles(spark, root, affected,
+        base.meta, dvs = base.dvs, keepRowId = bases.map(_ => RowIdCol),
+        rowIdBases = bases.getOrElse(Map.empty)), bases.isDefined)
+      writeAndCommit(spark, root, evolved.getOrElse(base.meta), rewrite(target), "rewrite",
+        opInfo, base.version, removed = affected, schemaEvolved = evolved.isDefined,
+        readConflict = addedReadGuard(spark, root, base.meta, matching))._1
+    }
+  }
+
+  /** Upsert by key, the rewrite [[merge]] and [[applyChanges]] share: an
+    * affected target row whose key appears in `source` is replaced by the
+    * source row, other target rows pass through, and source rows matching
+    * nothing are inserted. Row tracking: a replaced row keeps the TARGET
+    * row's id (threaded through the join as a struct field taken from the
+    * target side); inserts carry null, i.e. fresh computed ids.
+    */
+  private def upsertByKey(target: Affected, source: DataFrame, keyCols: Seq[String],
+                          schema: StructType): DataFrame = {
+    val payload = schema.fieldNames.toSeq.filterNot(keyCols.contains)
+    if (payload.isEmpty && !target.tracked)
+      // keys-only dataset: upsert degenerates to set union
+      target.rows.unionByName(source).distinct()
+    else if (payload.isEmpty) {
+      // Match the untracked branch's SET semantics exactly (it does
+      // union+distinct): pre-existing duplicate key tuples in the affected
+      // files collapse to ONE surviving row — the MIN-id row, so the
+      // oldest copy keeps its identity in the change feed — and only
+      // unmatched source keys insert. (Duplicate SOURCE rows are
+      // impossible here: the uniqueness check covers every column when
+      // the key set is the whole schema.) Without this, results would
+      // depend on the orthogonal row-tracking table property.
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(keyCols.map(col): _*).orderBy(col(RowIdCol).asc)
+      target.rows.withColumn("_rn", row_number().over(w))
+        .where(col("_rn") === 1).drop("_rn")
+        .unionByName(source.join(target.rows.select(keyCols.map(col): _*),
+          keyCols, "left_anti").select(col("*") +: target.freshIds: _*))
+    } else {
+      def packed(df: DataFrame, tag: String, id: Seq[Column]) =
+        df.select(keyCols.map(col) :+ struct(payload.map(col) ++ id: _*).as(tag): _*)
+      packed(target.rows, "_t", target.ids)
+        .join(packed(source, "_s", target.freshIds), keyCols, "full_outer")
+        .withColumn("_m", coalesce(col("_s"), col("_t")))
+        .select(schema.fieldNames.toIndexedSeq.map(n =>
+          if (keyCols.contains(n)) col(n) else col("_m")(n).as(n)) ++
+          target.ids.map(_ => col("_t")(RowIdCol).as(RowIdCol)): _*)
+    }
   }
 
   /** DELETE FROM root WHERE predicate. SQL DELETE semantics: rows where
@@ -227,26 +395,11 @@ object Mutations {
     */
   def deleteWhere(spark: SparkSession, root: String,
                   predicate: Column): MutationResult =
-    locally {
-      val (latest, meta, dvs, snap) = snapshotWithPath(spark, root)
-      val affected = affectedFiles(snap.where(predicate))
-      if (affected.isEmpty) MutationResult(latest, Nil, Nil)
-      else {
-        // row tracking: survivors keep their ids (materialized into the
-        // rewritten files); deleted ids simply never reappear
-        val bases = liveBases(spark, root, latest, affected)
-        val survivors = Versions
-          .readFiles(spark, root, affected, meta, dvs = dvs,
-            keepRowId = bases.map(_ => RowIdCol),
-            rowIdBases = bases.getOrElse(Map.empty))
-          .where(not(predicate <=> lit(true)))
-        rewriteCommit(spark, root, meta, survivors, affected,
-          opInfo = Map("op" -> "DELETE", "predicate" -> predSql(predicate)),
-          baseVersion = Some(latest),
-          readConflict = Some(addedReadGuard(spark, root, meta,
-            _.where(predicate <=> lit(true)))))
-      }
-    }
+    // row tracking: survivors keep their ids (materialized into the
+    // rewritten files); deleted ids simply never reappear
+    copyOnWrite(spark, root, snapshotWithPath(spark, root), _.where(predicate),
+        Map("op" -> "DELETE", "predicate" -> predSql(predicate)))(
+      _.rows.where(not(predicate <=> lit(true))))
 
   /** Column names a predicate references, resolved against the dataset
     * schema. Spark 4 Columns carry an opaque ColumnNode tree (not a
@@ -294,90 +447,66 @@ object Mutations {
     * missing middle this adds, and versioning makes it atomic.
     */
   def replaceWhere(spark: SparkSession, root: String, predicate: Column,
-                   data: DataFrame): MutationResult =
-    locally {
-      val (latest, meta, dvs, snap) = snapshotWithPath(spark, root)
-      val tgtCols = meta.schema.fieldNames.toSeq
-      val missing = tgtCols.filterNot(data.columns.contains)
-      val extra = data.columns.filterNot(tgtCols.contains)
-      require(missing.isEmpty && extra.isEmpty,
-        s"replaceWhere data columns must equal the dataset's; " +
-          s"missing=${missing.mkString(",")} extra=${extra.mkString(",")}")
-      val src = data.select(meta.schema.fields.toIndexedSeq.map(f =>
-        col(f.name).cast(f.dataType).as(f.name)): _*)
-      val stray = src.where(!(predicate <=> lit(true))).limit(1).collect()
-      require(stray.isEmpty,
-        s"replaceWhere data contains rows NOT matching the predicate " +
-          s"(e.g. ${stray.headOption.getOrElse("")}) — the write may only " +
-          "produce rows inside the range it replaces")
+                   data: DataFrame): MutationResult = {
+    val base = snapshotWithPath(spark, root)
+    val meta = base.meta
+    val src = normalised("replaceWhere data", data, meta.schema)
+    val stray = src.where(!(predicate <=> lit(true))).limit(1).collect()
+    require(stray.isEmpty,
+      s"replaceWhere data contains rows NOT matching the predicate " +
+        s"(e.g. ${stray.headOption.getOrElse("")}) — the write may only " +
+        "produce rows inside the range it replaces")
 
-      val refs = predicateRefs(spark, meta.schema, predicate)
-      val (liveFiles, _, _) = Versions.snapshotFullAt(spark, root, latest)
-      // a spec-EVOLVED snapshot carries old-epoch files that lack the
-      // current derived dirs, so path-resolved matching would MISS their
-      // rows — and that includes the all-old-epoch state right after
-      // `evolvePartitionSpec` (metadata-only) with zero new writes, where
-      // every signature agrees but none matches the CURRENT spec. The
-      // fast path therefore requires every live file's dir signature to
-      // EQUAL the current spec's; anything else falls back to the general
-      // locate path, whose snapshot re-derives the spec's columns
-      // row-level and stays exact on any epoch mix.
-      val specSig = meta.partitions.mkString("/")
-      val allCurrentEpoch = liveFiles.forall(r => r.split('/').dropRight(1)
-        .map(_.takeWhile(_ != '=')).mkString("/") == specSig)
-      val partitionScoped =
-        refs.nonEmpty && refs.subsetOf(meta.partitions.toSet) &&
-          meta.partitions.nonEmpty && allCurrentEpoch
-      val affected: Seq[String] =
-        if (partitionScoped) {
-          // evaluate the predicate against path-derived partition values
-          // on a LOCAL frame — full Spark cast/comparison semantics, no
-          // data read. Hive-escaped values unescape through the exact
-          // routine the writer used; the null partition dir maps to null.
-          import org.apache.spark.sql.Row
-          import org.apache.spark.sql.types.{StringType, StructField, StructType}
-          import scala.jdk.CollectionConverters._
-          val raw: Seq[Row] = liveFiles.map { rel =>
-            Row.fromSeq(rel +: meta.partitions.map { p =>
-              rel.split('/').collectFirst {
-                case seg if seg.startsWith(p + "=") =>
-                  Fetch.unescapePathName(seg.substring(p.length + 1))
-              }.filterNot(_ == "__HIVE_DEFAULT_PARTITION__").orNull
-            })
-          }
-          val schema0 = StructType(StructField("__file", StringType) +:
-            meta.partitions.map(p => StructField(p, StringType)))
-          spark.createDataFrame(raw.toList.asJava, schema0)
-            .select(col("__file") +: meta.partitions.map(p =>
-              col(p).cast(meta.schema(p).dataType).as(p)): _*)
-            .where(predicate <=> lit(true))
-            .select("__file").collect().map(_.getString(0)).toSeq.sorted
-        } else affectedFiles(snap.where(predicate))
-
-      if (affected.isEmpty && src.isEmpty) MutationResult(latest, Nil, Nil)
-      else {
-        val bases = liveBases(spark, root, latest, affected)
-        val idCol: Seq[Column] =
-          bases.map(_ => lit(null).cast("long").as(RowIdCol)).toSeq
-        val replacement =
-          if (partitionScoped) src.select(col("*") +: idCol: _*)
-          else {
-            val survivors = Versions
-              .readFiles(spark, root, affected, meta, dvs = dvs,
-                keepRowId = bases.map(_ => RowIdCol),
-                rowIdBases = bases.getOrElse(Map.empty))
-              .where(not(predicate <=> lit(true)))
-            survivors.unionByName(src.select(col("*") +: idCol: _*))
-          }
-        rewriteCommit(spark, root, meta, replacement, affected,
-          opInfo = Map("op" -> "REPLACE WHERE",
-            "predicate" -> predSql(predicate),
-            "partition_scoped" -> partitionScoped.toString),
-          baseVersion = Some(latest),
-          readConflict = Some(addedReadGuard(spark, root, meta,
-            _.where(predicate <=> lit(true)))))
+    val refs = predicateRefs(spark, meta.schema, predicate)
+    val (liveFiles, _, _) = Versions.snapshotFullAt(spark, root, base.version)
+    // a spec-EVOLVED snapshot carries old-epoch files that lack the
+    // current derived dirs, so path-resolved matching would MISS their
+    // rows — and that includes the all-old-epoch state right after
+    // `evolvePartitionSpec` (metadata-only) with zero new writes, where
+    // every signature agrees but none matches the CURRENT spec. The
+    // fast path therefore requires every live file's dir signature to
+    // EQUAL the current spec's; anything else falls back to the general
+    // locate path, whose snapshot re-derives the spec's columns
+    // row-level and stays exact on any epoch mix.
+    val specSig = meta.partitions.mkString("/")
+    val allCurrentEpoch = liveFiles.forall(r => r.split('/').dropRight(1)
+      .map(_.takeWhile(_ != '=')).mkString("/") == specSig)
+    val partitionScoped =
+      refs.nonEmpty && refs.subsetOf(meta.partitions.toSet) &&
+        meta.partitions.nonEmpty && allCurrentEpoch
+    // evaluate the predicate against path-derived partition values on a
+    // LOCAL frame — full Spark cast/comparison semantics, no data read.
+    // Hive-escaped values unescape through the exact routine the writer
+    // used; the null partition dir maps to null.
+    val scoped = Option.when(partitionScoped) {
+      import org.apache.spark.sql.Row
+      import org.apache.spark.sql.types.{StringType, StructField}
+      import scala.jdk.CollectionConverters._
+      val raw: Seq[Row] = liveFiles.map { rel =>
+        Row.fromSeq(rel +: meta.partitions.map { p =>
+          rel.split('/').collectFirst {
+            case seg if seg.startsWith(p + "=") =>
+              Fetch.unescapePathName(seg.substring(p.length + 1))
+          }.filterNot(_ == "__HIVE_DEFAULT_PARTITION__").orNull
+        })
       }
+      val schema0 = StructType(StructField("__file", StringType) +:
+        meta.partitions.map(p => StructField(p, StringType)))
+      spark.createDataFrame(raw.toList.asJava, schema0)
+        .select(col("__file") +: meta.partitions.map(p =>
+          col(p).cast(meta.schema(p).dataType).as(p)): _*)
+        .where(predicate <=> lit(true))
+        .select("__file").collect().map(_.getString(0)).toSeq.sorted
     }
+    copyOnWrite(spark, root, base, _.where(predicate),
+        Map("op" -> "REPLACE WHERE", "predicate" -> predSql(predicate),
+          "partition_scoped" -> partitionScoped.toString),
+        inserts = Some(src), scoped = scoped) { a =>
+      val inserted = src.select(col("*") +: a.freshIds: _*)
+      if (partitionScoped) inserted
+      else a.rows.where(not(predicate <=> lit(true))).unionByName(inserted)
+    }
+  }
 
   /** DELETE FROM root WHERE predicate — via a DELETION VECTOR: instead of
     * rewriting every file that contains a matching row (copy-on-write at
@@ -395,23 +524,21 @@ object Mutations {
     * paying the probe and vacuum can reclaim the replaced bytes.
     */
   def deleteWhereDv(spark: SparkSession, root: String,
-                    predicate: Column): MutationResult =
-    locally {
-      val (latest, meta, _, snap) = snapshotWithPath(spark, root, withRowIndex = true)
-      writeDv(spark, root, snap.where(predicate))._1 match {
-        case None => MutationResult(latest, Nil, Nil)
-        case Some(dv) =>
-          preCommitHook()
-          val v = Versions.commit(spark, root, "delete_dv", Nil, meta,
-            dvs = Seq(dv),
-            opInfo = Map("op" -> "DELETE", "mode" -> "dv",
-              "predicate" -> predSql(predicate)),
-            baseVersion = Some(latest),
-            readConflict = Some(addedReadGuard(spark, root, meta,
-              _.where(predicate <=> lit(true)))))
-          MutationResult(v, Nil, Nil)
-      }
+                    predicate: Column): MutationResult = {
+    val Base(latest, meta, _, snap) = snapshotWithPath(spark, root, withRowIndex = true)
+    writeDv(spark, root, snap.where(predicate))._1 match {
+      case None => MutationResult(latest, Nil, Nil)
+      case Some(dv) =>
+        preCommitHook()
+        val v = Versions.commit(spark, root, "delete_dv", Nil, meta,
+          dvs = Seq(dv),
+          opInfo = Map("op" -> "DELETE", "mode" -> "dv",
+            "predicate" -> predSql(predicate)),
+          baseVersion = Some(latest),
+          readConflict = addedReadGuard(spark, root, meta, _.where(predicate)))
+        MutationResult(v, Nil, Nil)
     }
+  }
 
   /** Write the `(file, row_index)` pairs of the `matched` snapshot rows
     * as a fresh `_graft_dv/` sidecar — the locate scan and the DV write
@@ -445,50 +572,6 @@ object Mutations {
     else (Some(DvRef(dvRel, covered)), m)
   }
 
-  /** Append `rows` through publish's sized-write path and commit them plus
-    * `dv` as ONE `update_dv` entry — the shared tail of the DV-backed
-    * UPDATE/MERGE: old row copies die via the deletion vector, their
-    * replacements ride `added`, and no pre-existing data file is rewritten.
-    * A crash between the append and the commit leaves the new files
-    * invisible (versioned-root visibility is commit-controlled) and the
-    * DV sidecar unreferenced — vacuum reclaims both past the grace
-    * horizon. `sizing`, when an earlier action observed it over `rows`,
-    * replaces the append's sizing sample (which otherwise also answers
-    * emptiness).
-    */
-  private def updateDvCommit(spark: SparkSession, root: String,
-                             meta: DatasetMeta, rows: DataFrame,
-                             sizing: Option[Publish.WriteSizing],
-                             dv: Option[DvRef],
-                             opInfo: Map[String, String] = Map.empty,
-                             baseVersion: Option[Int] = None,
-                             readConflict: Option[Seq[String] => Option[String]] = None): MutationResult = {
-    Versions.enforceConstraints(spark, root, rows)
-    // mapped datasets write the replacement copies under PHYSICAL names
-    // (see rewriteCommit — the mapping pins one physical name per column
-    // across every live file)
-    val physRows =
-      if (meta.colMap.isEmpty) rows
-      else rows.select(rows.schema.fieldNames.toIndexedSeq.map(n =>
-        col(n).as(meta.physName(n))): _*)
-    val newFiles =
-      if (sizing.exists(_.rows == 0)) Nil
-      else Publish.publishImpl(spark, physRows, root,
-        meta.partitions, "append", Nil, Nil, 16, 0, Nil,
-        requireSchemaMatch = meta.colMap.isEmpty, internalRewrite = true,
-        directCommit = true, emptyOk = true, sizing = sizing)
-    val addedRel = Versions.relativize(spark, root, newFiles)
-    preCommitHook()
-    val v = Versions.commit(spark, root, "update_dv", newFiles, meta,
-      dvs = dv.toSeq, opInfo = opInfo, baseVersion = baseVersion,
-      readConflict = readConflict)
-    val idxCols = StatsIndex.indexedColumns(spark, root)
-    if (idxCols.nonEmpty && newFiles.nonEmpty)
-      StatsIndex.appendFiles(spark, root, newFiles, idxCols)
-    if (newFiles.nonEmpty) BloomIndex.appendFiles(spark, root, newFiles)
-    MutationResult(v, Nil, addedRel)
-  }
-
   /** UPDATE root SET assignments WHERE predicate — via a DELETION VECTOR:
     * instead of rewriting every file that contains a matching row
     * ([[updateWhere]]'s copy-on-write at FILE granularity), one commit
@@ -505,45 +588,32 @@ object Mutations {
   def updateWhereDv(spark: SparkSession, root: String, predicate: Column,
                     assignments: Map[String, Column]): MutationResult = {
     require(assignments.nonEmpty, "updateWhereDv needs at least one assignment")
-    locally {
-      // row tracking: the updated COPIES carry their originals' ids
-      // (materialized — an update preserves row identity)
-      val bases = Versions.latestVersion(spark, root)
-        .flatMap(v => liveBases(spark, root, v))
-      val (latest, meta, _, snap) =
-        snapshotWithPath(spark, root, withRowIndex = true, rowIdBases = bases)
-      val bad = assignments.keySet.filterNot(meta.schema.fieldNames.contains)
-      require(bad.isEmpty, s"assignment to unknown columns: ${bad.mkString(",")}")
-      val part = assignments.keySet.filter(meta.partitions.contains)
-      require(part.isEmpty,
-        s"cannot assign partition columns ${part.mkString(",")} in updateWhereDv")
-      // matched feeds two actions (the DV write, then the updated copies);
-      // persist so the locate scan runs once. The updated copies ride
-      // beside the DV handles so the DV write also observes their sizing.
-      val matched = snap.where(predicate).persist()
-      try {
-        val updatedCols = meta.schema.fields.toIndexedSeq.map { f =>
-          assignments.get(f.name) match {
-            case Some(e) => e.cast(f.dataType).as(f.name)
-            case None => col(f.name)
-          }
-        } ++ bases.map(_ => col(RowIdCol))
-        val located = matched.select(updatedCols ++ Seq(col(FileCol), col(RowIdxCol)): _*)
-        val updated = located.drop(FileCol, RowIdxCol)
-        writeDv(spark, root, located,
-            Publish.sizingMetrics(updated.schema, meta.partitions)) match {
-          case (None, _) => MutationResult(latest, Nil, Nil)
-          case (Some(dv), m) =>
-            updateDvCommit(spark, root, meta, updated, Publish.observedSizing(m), Some(dv),
-              baseVersion = Some(latest),
-              opInfo = Map("op" -> "UPDATE", "mode" -> "dv",
-                "predicate" -> predSql(predicate),
-                "columns" -> assignments.keys.toSeq.sorted.mkString(",")),
-              readConflict = Some(addedReadGuard(spark, root, meta,
-                _.where(predicate <=> lit(true)))))
-        }
-      } finally matched.unpersist()
-    }
+    // row tracking: the updated COPIES carry their originals' ids
+    // (materialized — an update preserves row identity)
+    val bases = Versions.latestVersion(spark, root)
+      .flatMap(v => liveBases(spark, root, v))
+    val Base(latest, meta, _, snap) =
+      snapshotWithPath(spark, root, withRowIndex = true, rowIdBases = bases)
+    val updatedCols = updatedColumns("updateWhereDv", meta, assignments, None) ++
+      bases.map(_ => col(RowIdCol))
+    // matched feeds two actions (the DV write, then the updated copies);
+    // persist so the locate scan runs once. The updated copies ride
+    // beside the DV handles so the DV write also observes their sizing.
+    val matched = snap.where(predicate).persist()
+    try {
+      val located = matched.select(updatedCols ++ Seq(col(FileCol), col(RowIdxCol)): _*)
+      val updated = located.drop(FileCol, RowIdxCol)
+      writeDv(spark, root, located,
+          Publish.sizingMetrics(updated.schema, meta.partitions)) match {
+        case (None, _) => MutationResult(latest, Nil, Nil)
+        case (Some(dv), m) =>
+          writeAndCommit(spark, root, meta, updated, "update_dv",
+            Map("op" -> "UPDATE", "mode" -> "dv", "predicate" -> predSql(predicate),
+              "columns" -> assignments.keys.toSeq.sorted.mkString(",")),
+            latest, dvs = Seq(dv), sizing = Publish.observedSizing(m),
+            readConflict = addedReadGuard(spark, root, meta, _.where(predicate)))._1
+      }
+    } finally matched.unpersist()
   }
 
   /** MERGE INTO root USING source ON keyCols — via a DELETION VECTOR:
@@ -563,60 +633,43 @@ object Mutations {
   def mergeDv(spark: SparkSession, root: String, source: DataFrame,
               keyCols: Seq[String]): MutationResult = {
     require(keyCols.nonEmpty, "mergeDv needs at least one key column")
-    locally {
-      val bases = Versions.latestVersion(spark, root)
-        .flatMap(v => liveBases(spark, root, v))
-      val (latest, meta, _, snap) =
-        snapshotWithPath(spark, root, withRowIndex = true, rowIdBases = bases)
-      val tgtCols = meta.schema.fieldNames.toSeq
-      keyCols.foreach { k =>
-        require(tgtCols.contains(k), s"key column $k is not a dataset column")
-        require(source.columns.contains(k), s"key column $k missing from source")
-      }
-      val missing = tgtCols.filterNot(source.columns.contains)
-      val extra = source.columns.filterNot(tgtCols.contains)
-      require(missing.isEmpty && extra.isEmpty,
-        s"merge source columns must equal dataset columns; missing=${missing.mkString(",")} extra=${extra.mkString(",")}")
-      val src = source.select(meta.schema.fields.toIndexedSeq.map(f =>
-        col(f.name).cast(f.dataType).as(f.name)): _*).persist()
-      try {
-        // the duplicate-key check scans all of src: it also observes the
-        // emptiness and write sizing of the appended rows (src, plus the
-        // fixed-width row id when tracked)
-        val written = bases.fold(src.schema)(_ =>
-          src.schema.add(RowIdCol, org.apache.spark.sql.types.LongType))
-        val obs = Observation()
-        val sizingAggs = Publish.sizingMetrics(written, meta.partitions)
-        val dup = duplicateKey(
-          src.observe(obs, sizingAggs.head, sizingAggs.tail: _*), keyCols)
-        require(dup.isEmpty,
-          s"merge source is not unique on (${keyCols.mkString(",")}): e.g. ${dup.getOrElse("")}")
-        val sizing = Publish.observedSizing(obs.get)
-        if (sizing.fold(src.isEmpty)(_.rows == 0)) MutationResult(latest, Nil, Nil)
-        else {
-          val matched = snap.join(src.select(keyCols.map(col): _*),
-            keyCols, "left_semi")
-          val dv = writeDv(spark, root, matched)._1
-          // row tracking: a matched source row is an UPDATE — it inherits
-          // the matched target row's id (min over a key-duplicated target,
-          // which this path collapses by design); unmatched rows insert
-          // with fresh ids (null here → base + row_index at read)
-          val srcOut = bases match {
-            case None => src
-            case Some(_) =>
-              val idsByKey = matched.groupBy(keyCols.map(col): _*)
-                .agg(min(RowIdCol).as(RowIdCol))
-              src.join(idsByKey, keyCols, "left")
-          }
-          updateDvCommit(spark, root, meta, srcOut, sizing, dv,
-            baseVersion = Some(latest),
-            opInfo = Map("op" -> "MERGE", "mode" -> "dv",
-              "keys" -> keyCols.mkString(",")),
-            readConflict = Some(addedReadGuard(spark, root, meta,
-              _.join(src.select(keyCols.map(col): _*), keyCols, "left_semi"))))
+    val bases = Versions.latestVersion(spark, root)
+      .flatMap(v => liveBases(spark, root, v))
+    val Base(latest, meta, _, snap) =
+      snapshotWithPath(spark, root, withRowIndex = true, rowIdBases = bases)
+    val src = normalised("merge source", source, meta.schema, keyCols).persist()
+    try {
+      // the duplicate-key check scans all of src: it also observes the
+      // emptiness and write sizing of the appended rows (src, plus the
+      // fixed-width row id when tracked)
+      val written = bases.fold(src.schema)(_ =>
+        src.schema.add(RowIdCol, org.apache.spark.sql.types.LongType))
+      val obs = Observation()
+      val sizingAggs = Publish.sizingMetrics(written, meta.partitions)
+      requireUniqueKeys("merge source",
+        src.observe(obs, sizingAggs.head, sizingAggs.tail: _*), keyCols)
+      val sizing = Publish.observedSizing(obs.get)
+      if (sizing.fold(src.isEmpty)(_.rows == 0)) MutationResult(latest, Nil, Nil)
+      else {
+        val matched = keyed(src, keyCols)(snap)
+        val dv = writeDv(spark, root, matched)._1
+        // row tracking: a matched source row is an UPDATE — it inherits
+        // the matched target row's id (min over a key-duplicated target,
+        // which this path collapses by design); unmatched rows insert
+        // with fresh ids (null here → base + row_index at read)
+        val srcOut = bases match {
+          case None => src
+          case Some(_) =>
+            val idsByKey = matched.groupBy(keyCols.map(col): _*)
+              .agg(min(RowIdCol).as(RowIdCol))
+            src.join(idsByKey, keyCols, "left")
         }
-      } finally src.unpersist()
-    }
+        writeAndCommit(spark, root, meta, srcOut, "update_dv",
+          Map("op" -> "MERGE", "mode" -> "dv", "keys" -> keyCols.mkString(",")),
+          latest, dvs = dv.toSeq, sizing = sizing,
+          readConflict = addedReadGuard(spark, root, meta, keyed(src, keyCols)))._1
+      }
+    } finally src.unpersist()
   }
 
   /** UPDATE root SET assignments WHERE predicate. Rows where the
@@ -629,39 +682,13 @@ object Mutations {
   def updateWhere(spark: SparkSession, root: String, predicate: Column,
                   assignments: Map[String, Column]): MutationResult = {
     require(assignments.nonEmpty, "updateWhere needs at least one assignment")
-    locally {
-      val (latest, meta, dvs, snap) = snapshotWithPath(spark, root)
-      val bad = assignments.keySet.filterNot(meta.schema.fieldNames.contains)
-      require(bad.isEmpty, s"assignment to unknown columns: ${bad.mkString(",")}")
-      val part = assignments.keySet.filter(meta.partitions.contains)
-      require(part.isEmpty,
-        s"cannot assign partition columns ${part.mkString(",")} in updateWhere")
-      val affected = affectedFiles(snap.where(predicate))
-      if (affected.isEmpty) MutationResult(latest, Nil, Nil)
-      else {
-        val updatedCols = meta.schema.fields.toIndexedSeq.map { f =>
-          assignments.get(f.name) match {
-            case Some(e) =>
-              when(predicate <=> lit(true), e.cast(f.dataType))
-                .otherwise(col(f.name)).as(f.name)
-            case None => col(f.name)
-          }
-        }
-        // row tracking: updated AND untouched-neighbor rows keep their ids
-        val bases = liveBases(spark, root, latest, affected)
-        val rewritten = Versions
-          .readFiles(spark, root, affected, meta, dvs = dvs,
-            keepRowId = bases.map(_ => RowIdCol),
-            rowIdBases = bases.getOrElse(Map.empty))
-          .select(updatedCols ++ bases.map(_ => col(RowIdCol)): _*)
-        rewriteCommit(spark, root, meta, rewritten, affected,
-          opInfo = Map("op" -> "UPDATE", "predicate" -> predSql(predicate),
-            "columns" -> assignments.keys.toSeq.sorted.mkString(",")),
-          baseVersion = Some(latest),
-          readConflict = Some(addedReadGuard(spark, root, meta,
-            _.where(predicate <=> lit(true)))))
-      }
-    }
+    val base = snapshotWithPath(spark, root)
+    val updatedCols = updatedColumns("updateWhere", base.meta, assignments, Some(predicate))
+    // row tracking: updated AND untouched-neighbor rows keep their ids
+    copyOnWrite(spark, root, base, _.where(predicate),
+        Map("op" -> "UPDATE", "predicate" -> predSql(predicate),
+          "columns" -> assignments.keys.toSeq.sorted.mkString(",")))(
+      a => a.rows.select(updatedCols ++ a.ids: _*))
   }
 
   /** APPLY CHANGES INTO — the CDC-sink counterpart of
@@ -680,75 +707,24 @@ object Mutations {
     require(keyCols.nonEmpty, "applyChanges needs at least one key column")
     require(changes.columns.contains(opCol),
       s"changes must carry the operation column $opCol")
-    locally {
-      val (latest, meta, dvs, snap) = snapshotWithPath(spark, root)
-      val tgtCols = meta.schema.fieldNames.toSeq
-      val missing = tgtCols.filterNot(changes.columns.contains)
-      val extra = changes.columns.filterNot(c => tgtCols.contains(c) || c == opCol)
-      require(missing.isEmpty && extra.isEmpty,
-        s"changes columns must equal dataset columns + $opCol; missing=${missing.mkString(",")} extra=${extra.mkString(",")}")
-      val normalized = changes.select(
-        meta.schema.fields.toIndexedSeq.map(f =>
-          col(f.name).cast(f.dataType).as(f.name)) :+ col(opCol): _*).persist()
-      try {
-        val badOp = normalized
-          .where(col(opCol).isNull || !col(opCol).isin("upsert", "delete"))
-          .select(opCol).limit(1).collect()
-        require(badOp.isEmpty,
-          s"unknown $opCol value ${badOp.headOption.getOrElse("")}; expected upsert|delete")
-        val dup = duplicateKey(normalized, keyCols)
-        require(dup.isEmpty,
-          s"change batch is not unique on (${keyCols.mkString(",")}): e.g. ${dup.getOrElse("")}")
-
-        val affected = affectedFiles(
-          snap.join(normalized.select(keyCols.map(col): _*), keyCols, "left_semi"))
-        val ups = normalized.where(col(opCol) === "upsert").drop(opCol)
-        val delKeys = normalized.where(col(opCol) === "delete")
-          .select(keyCols.map(col): _*)
-        val payload = tgtCols.filterNot(keyCols.contains)
-        // row tracking: upserts of existing keys keep the target row's id
-        // (same struct threading as merge); inserts get fresh computed ids
-        val bases = liveBases(spark, root, latest, affected)
-        def targetRows = Versions.readFiles(spark, root, affected, meta,
-          dvs = dvs, keepRowId = bases.map(_ => RowIdCol),
-          rowIdBases = bases.getOrElse(Map.empty))
-        val upserted =
-          if (payload.isEmpty) bases match {
-            case None => targetRows.unionByName(ups).distinct()
-            case Some(_) =>
-              // same set-semantics alignment as merge's keys-only branch:
-              // collapse pre-existing duplicate target keys to the min-id
-              // row so tracked and untracked APPLY CHANGES agree
-              val w = org.apache.spark.sql.expressions.Window
-                .partitionBy(keyCols.map(col): _*).orderBy(col(RowIdCol).asc)
-              targetRows.withColumn("_rn", row_number().over(w))
-                .where(col("_rn") === 1).drop("_rn")
-                .unionByName(
-                  ups.join(targetRows.select(keyCols.map(col): _*),
-                      keyCols, "left_anti")
-                    .withColumn(RowIdCol, lit(null).cast("long")))
-          } else {
-            val idInT = bases.map(_ => col(RowIdCol)).toSeq
-            val idInS = bases.map(_ => lit(null).cast("long").as(RowIdCol)).toSeq
-            def packed(df: DataFrame, tag: String, id: Seq[Column]) =
-              df.select(keyCols.map(col) :+
-                struct(payload.map(col) ++ id: _*).as(tag): _*)
-            packed(targetRows, "_t", idInT)
-              .join(packed(ups, "_s", idInS), keyCols, "full_outer")
-              .withColumn("_m", coalesce(col("_s"), col("_t")))
-              .select(meta.schema.fieldNames.toIndexedSeq.map(n =>
-                if (keyCols.contains(n)) col(n) else col("_m")(n).as(n)) ++
-                bases.map(_ => col("_t")(RowIdCol).as(RowIdCol)): _*)
-          }
-        val merged = upserted.join(delKeys, keyCols, "left_anti")
-        if (affected.isEmpty && ups.isEmpty) MutationResult(latest, Nil, Nil)
-        else rewriteCommit(spark, root, meta, merged, affected,
-          opInfo = Map("op" -> "APPLY CHANGES", "keys" -> keyCols.mkString(",")),
-          baseVersion = Some(latest),
-          readConflict = Some(addedReadGuard(spark, root, meta,
-            _.join(normalized.select(keyCols.map(col): _*), keyCols, "left_semi"))))
-      } finally normalized.unpersist()
-    }
+    val base = snapshotWithPath(spark, root)
+    val normalized = normalised("change batch", changes, base.meta.schema, keyCols,
+      passThrough = Seq(opCol)).persist()
+    try {
+      val badOp = normalized
+        .where(col(opCol).isNull || !col(opCol).isin("upsert", "delete"))
+        .select(opCol).limit(1).collect()
+      require(badOp.isEmpty,
+        s"unknown $opCol value ${badOp.headOption.getOrElse("")}; expected upsert|delete")
+      requireUniqueKeys("change batch", normalized, keyCols)
+      val ups = normalized.where(col(opCol) === "upsert").drop(opCol)
+      val delKeys = normalized.where(col(opCol) === "delete")
+        .select(keyCols.map(col): _*)
+      copyOnWrite(spark, root, base, keyed(normalized, keyCols),
+          Map("op" -> "APPLY CHANGES", "keys" -> keyCols.mkString(",")),
+          inserts = Some(ups))(
+        a => upsertByKey(a, ups, keyCols, base.meta.schema).join(delKeys, keyCols, "left_anti"))
+    } finally normalized.unpersist()
   }
 
   /** MERGE INTO root USING source ON keyCols — upsert: a target row whose
@@ -764,8 +740,8 @@ object Mutations {
     * files containing a matched key are re-read and merged — the merge
     * join itself runs over affected rows ∪ source, never the full
     * dataset.
-    */
-  /** `evolveSchema = true` is the Delta `autoMerge` behavior: the source
+    *
+    * `evolveSchema = true` is the Delta `autoMerge` behavior: the source
     * may carry NEW columns, which join the dataset schema additively in
     * the SAME rewrite commit — existing files simply lack them (reads
     * null-fill, as in [[Publish.appendEvolved]]), matched rows take the
@@ -777,116 +753,54 @@ object Mutations {
   def merge(spark: SparkSession, root: String, source: DataFrame,
             keyCols: Seq[String], evolveSchema: Boolean = false): MutationResult = {
     require(keyCols.nonEmpty, "merge needs at least one key column")
-    locally {
-      val (latest, meta0, dvs, snap) = snapshotWithPath(spark, root)
-      val tgtCols = meta0.schema.fieldNames.toSeq
-      keyCols.foreach { k =>
-        require(tgtCols.contains(k), s"key column $k is not a dataset column")
-        require(source.columns.contains(k), s"key column $k missing from source")
-      }
-      val missing = tgtCols.filterNot(source.columns.contains)
-      val extraF = source.schema.fields.filterNot(f => tgtCols.contains(f.name)).toSeq
-      require(missing.isEmpty,
-        s"merge source is missing dataset columns: ${missing.mkString(",")}")
-      require(extraF.isEmpty || evolveSchema,
-        s"merge source carries new columns ${extraF.map(_.name).mkString(",")}; " +
-          "pass evolveSchema=true to add them to the dataset additively")
-      extraF.foreach(f => require(!f.name.startsWith("_") && !f.name.startsWith("."),
-        s"evolved column ${f.name} would be hidden from parquet readers"))
-      // the evolved logical schema: existing fields (type-WIDENED where the
-      // source carries a lossless promotion — int→long, float→double,
-      // decimal growth; see [[Widen]]), new ones appended (a name-mapped
-      // dataset's new columns bind identity — no map change). Without
-      // evolveSchema the source is cast to the recorded types as before
-      // (ANSI catches a lossy downcast at runtime).
-      val (meta, widenedCols) =
-        if (!evolveSchema) (meta0, Nil)
-        else {
-          val (w, widened) = Widen.widenSchema(meta0.schema, source.schema,
-            meta0.partitions)
-          require(widened.isEmpty || !widened.exists(keyCols.contains) ||
-              meta0.colMap.isEmpty,
-            "widening a key column on a column-mapped dataset is not supported")
-          (meta0.copy(schema = w), widened)
-        }
-      // stale bloom filters on a widened column would false-skip files
-      if (widenedCols.nonEmpty) BloomIndex.invalidateFor(spark, root, widenedCols)
-      // normalize source to (evolved) target order + types, once
-      val src = source.select(meta.schema.fields.toIndexedSeq.map(f =>
-        col(f.name).cast(f.dataType).as(f.name)): _*).persist()
-      try {
-        val dup = duplicateKey(src, keyCols)
-        require(dup.isEmpty,
-          s"merge source is not unique on (${keyCols.mkString(",")}): e.g. ${dup.getOrElse("")}")
-
-        val affected = affectedFiles(
-          snap.join(src.select(keyCols.map(col): _*), keyCols, "left_semi"))
-        val payload = meta.schema.fieldNames.toSeq.filterNot(keyCols.contains)
-        // row tracking: matched rows are UPDATES — they keep the target
-        // row's id (threaded through the join as a struct field taken
-        // from the TARGET side); inserts carry null → fresh computed ids
-        val bases = liveBases(spark, root, latest, affected)
-        // affected target rows under the OLD schema, null-extended to the
-        // evolved one (their files predate the new columns) and UPCAST to
-        // any widened types so both merge sides agree
-        def targetRows = {
-          val old = extraF.foldLeft(
-            Versions.readFiles(spark, root, affected, meta0, dvs = dvs,
-              keepRowId = bases.map(_ => RowIdCol),
-              rowIdBases = bases.getOrElse(Map.empty)))(
-            (d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
-          if (widenedCols.isEmpty) old
-          else old.select(old.columns.toIndexedSeq.map(n =>
-            if (widenedCols.contains(n)) col(n).cast(meta.schema(n).dataType).as(n)
-            else col(n)): _*)
-        }
-        val merged =
-          if (payload.isEmpty) bases match {
-            case None =>
-              // keys-only dataset: upsert degenerates to set union
-              targetRows.unionByName(src).distinct()
-            case Some(_) =>
-              // Match the untracked branch's SET semantics exactly (it
-              // does union+distinct): pre-existing duplicate key tuples
-              // in the affected files collapse to ONE surviving row —
-              // the MIN-id row, so the oldest copy keeps its identity in
-              // the change feed — and only unmatched source keys insert.
-              // (Duplicate SOURCE rows are impossible here: the
-              // uniqueness require above covers every column when the
-              // key set is the whole schema.) Without this, merge
-              // results depended on the orthogonal row-tracking table
-              // property.
-              val w = org.apache.spark.sql.expressions.Window
-                .partitionBy(keyCols.map(col): _*).orderBy(col(RowIdCol).asc)
-              targetRows.withColumn("_rn", row_number().over(w))
-                .where(col("_rn") === 1).drop("_rn")
-                .unionByName(
-                  src.join(targetRows.select(keyCols.map(col): _*),
-                      keyCols, "left_anti")
-                    .withColumn(RowIdCol, lit(null).cast("long")))
-          } else {
-            val idInT = bases.map(_ => col(RowIdCol)).toSeq
-            val idInS = bases.map(_ => lit(null).cast("long").as(RowIdCol)).toSeq
-            def packed(df: DataFrame, tag: String, id: Seq[Column]) =
-              df.select(keyCols.map(col) :+
-                struct(payload.map(col) ++ id: _*).as(tag): _*)
-            packed(targetRows, "_t", idInT)
-              .join(packed(src, "_s", idInS), keyCols, "full_outer")
-              .withColumn("_m", coalesce(col("_s"), col("_t")))
-              .select(meta.schema.fieldNames.toIndexedSeq.map(n =>
-                if (keyCols.contains(n)) col(n) else col("_m")(n).as(n)) ++
-                bases.map(_ => col("_t")(RowIdCol).as(RowIdCol)): _*)
-          }
-        if (affected.isEmpty && src.isEmpty) MutationResult(latest, Nil, Nil)
-        else rewriteCommit(spark, root, meta, merged, affected,
-          schemaEvolved = extraF.nonEmpty || widenedCols.nonEmpty,
-          opInfo = Map("op" -> "MERGE", "keys" -> keyCols.mkString(",")),
-          baseVersion = Some(latest),
-          // concurrent adds are checked under the PRE-evolution schema:
-          // files that landed before this commit can't carry the new cols
-          readConflict = Some(addedReadGuard(spark, root, meta0,
-            _.join(src.select(keyCols.map(col): _*), keyCols, "left_semi"))))
-      } finally src.unpersist()
+    val base = snapshotWithPath(spark, root)
+    val meta0 = base.meta
+    val extraF = source.schema.fields.filterNot(f =>
+      meta0.schema.fieldNames.contains(f.name)).toSeq
+    require(extraF.isEmpty || evolveSchema,
+      s"merge source carries new columns ${extraF.map(_.name).mkString(",")}; " +
+        "pass evolveSchema=true to add them to the dataset additively")
+    extraF.foreach { f =>
+      require(!keyCols.contains(f.name), s"key column ${f.name} is not a dataset column")
+      require(!f.name.startsWith("_") && !f.name.startsWith("."),
+        s"evolved column ${f.name} would be hidden from parquet readers")
     }
+    // the evolved logical schema: existing fields (type-WIDENED where the
+    // source carries a lossless promotion — int→long, float→double,
+    // decimal growth; see [[Widen]]), new ones appended (a name-mapped
+    // dataset's new columns bind identity — no map change). Without
+    // evolveSchema the source is cast to the recorded types.
+    val (meta, widenedCols) =
+      if (!evolveSchema) (meta0, Nil)
+      else {
+        val (w, widened) = Widen.widenSchema(meta0.schema, source.schema,
+          meta0.partitions)
+        require(widened.isEmpty || !widened.exists(keyCols.contains) ||
+            meta0.colMap.isEmpty,
+          "widening a key column on a column-mapped dataset is not supported")
+        (meta0.copy(schema = w), widened)
+      }
+    // normalize source to (evolved) target order + types, once
+    val src = normalised("merge source", source, meta.schema, keyCols)
+    // stale bloom filters on a widened column would false-skip files
+    if (widenedCols.nonEmpty) BloomIndex.invalidateFor(spark, root, widenedCols)
+    src.persist()
+    try {
+      requireUniqueKeys("merge source", src, keyCols)
+      // affected target rows under the OLD schema, null-extended to the
+      // evolved one (their files predate the new columns) and UPCAST to
+      // any widened types so both merge sides agree
+      def evolve(old: DataFrame): DataFrame = {
+        val wide = extraF.foldLeft(old)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
+        if (widenedCols.isEmpty) wide
+        else wide.select(wide.columns.toIndexedSeq.map(n =>
+          if (widenedCols.contains(n)) col(n).cast(meta.schema(n).dataType).as(n)
+          else col(n)): _*)
+      }
+      copyOnWrite(spark, root, base, keyed(src, keyCols),
+          Map("op" -> "MERGE", "keys" -> keyCols.mkString(",")), inserts = Some(src),
+          evolved = Some(meta).filter(_ => extraF.nonEmpty || widenedCols.nonEmpty))(
+        a => upsertByKey(a.map(evolve), src, keyCols, meta.schema))
+    } finally src.unpersist()
   }
 }

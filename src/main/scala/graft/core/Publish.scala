@@ -495,8 +495,8 @@ object Publish {
     * and applies within-task clustering. Pure plan surgery, no I/O beyond
     * the sizing sample — shared by the default (listing-diff) and
     * direct-commit write paths.
-    */
-  /** `emptyOk = true` returns None for an empty frame instead of
+    *
+    * `emptyOk = true` returns None for an empty frame instead of
     * throwing — internal rewrite paths use it so "the delete removed
     * every row of the affected files" costs no extra emptiness probe.
     * `sizing`: facts a caller already observed over exactly these rows
@@ -763,7 +763,8 @@ object Publish {
     if (statsCols.nonEmpty) {
       if (mode == "append")
         StatsIndex.appendFiles(spark, root, newFiles, statsCols,
-          markComplete = priorManifestCols.isDefined, verifyFiles = Some(allAfter))
+          markComplete = priorManifestCols.isDefined,
+          verifyFiles = priorManifestCols.map(_ => allAfter))
       else StatsIndex.buildFor(spark, root, DatasetMeta(userSchema, partitions), allAfter, statsCols)
     } else priorManifestCols.foreach { cols =>
       // An EVOLVED append may lack a recorded index column entirely; the
@@ -857,122 +858,59 @@ object Publish {
   def publishDedupAppend(spark: SparkSession, df: DataFrame, root: String,
                          keyCols: Seq[String],
                          firstCreatePartitions: Seq[String] = Nil): Seq[String] =
-    dedupAppendImpl(spark, df, root, keyCols, firstCreatePartitions,
-      stateFpp = None, knownBloom = None)._1
-
-  /** [[publishDedupAppend]] returning a Bloom filter (false-positive
-    * rate `fpp`) of ALL keys now in the dataset (existing ∪ appended)
-    * alongside the written files — state for a caller appending
-    * repeatedly (a streaming sink). Passing the returned filter back as
-    * `knownBloom` skips the existing-key count + filter build passes on
-    * every later batch; the appended keys are folded in by one small pass
-    * over the new rows. The filter never decides which rows are new (the
-    * anti-join does), so a carried filter whose fpp degrades as the
-    * dataset outgrows its sizing costs nothing in correctness. Drop the
-    * state to rebuild it at the right size.
-    */
-  def publishDedupAppendWithState(spark: SparkSession, df: DataFrame, root: String,
-                                  keyCols: Seq[String], fpp: Double = 0.01,
-                                  firstCreatePartitions: Seq[String] = Nil,
-                                  knownBloom: Option[Array[Byte]] = None): (Seq[String], Array[Byte]) = {
-    val (files, state) = dedupAppendImpl(spark, df, root, keyCols,
-      firstCreatePartitions, Some(fpp), knownBloom)
-    (files, state.get)
-  }
-
-  /** Shared core: `stateFpp = None` (the plain append) builds no filter.
-    *
-    * The ENTIRE read-prove-append cycle runs under the dataset's writer
-    * lock: without it, two concurrent deliveries of overlapping batches
-    * could each prove the other's keys absent (both key scans ran before
-    * either wrote) and insert duplicates — the exactly-once guarantee
-    * would hold per-writer but not per-dataset.
-    */
-  private def dedupAppendImpl(spark: SparkSession, df: DataFrame, root: String,
-                              keyCols: Seq[String], firstCreatePartitions: Seq[String],
-                              stateFpp: Option[Double],
-                              knownBloom: Option[Array[Byte]]): (Seq[String], Option[Array[Byte]]) =
+    // The ENTIRE read-prove-append cycle runs under the dataset's writer
+    // lock: without it, two concurrent deliveries of overlapping batches
+    // could each prove the other's keys absent (both key scans ran before
+    // either wrote) and insert duplicates — the exactly-once guarantee
+    // would hold per-writer but not per-dataset.
     DatasetLock.withLock(spark, root) {
-      dedupAppendInner(spark, df, root, keyCols, firstCreatePartitions, stateFpp, knownBloom)
-    }
-
-  private def dedupAppendInner(spark: SparkSession, df: DataFrame, root: String,
-                               keyCols: Seq[String], firstCreatePartitions: Seq[String],
-                               stateFpp: Option[Double],
-                               knownBloom: Option[Array[Byte]]): (Seq[String], Option[Array[Byte]]) = {
-    require(keyCols.nonEmpty && keyCols.forall(df.columns.contains),
-      s"key columns ${keyCols.filterNot(df.columns.contains).mkString(",")} do not exist")
-    val meta = DatasetMeta.read(spark, root)
-    // Same guard as append-mode publish: data without a sidecar (a crashed
-    // earlier publish, or a foreign directory) must never be silently
-    // clobbered by the first-create overwrite path.
-    require(meta.nonEmpty || !Fetch.hasData(spark, root),
-      s"cannot dedup-append to $root: it contains data but no graft metadata " +
-        "(recover or republish with mode=overwrite)")
-    val keyHash = xxhash64(keyCols.map(col): _*)
-    def bloomOf(keys: DataFrame, fpp: Double): Array[Byte] = {
-      val n = math.max(1L, keys.count())
-      keys.agg(graft.functions.ProbFilters.bloomAgg(keyHash, n, fpp).as("b"))
-        .head().getAs[Array[Byte]]("b")
-    }
-    if (meta.isEmpty || !Fetch.hasData(spark, root)) {
-      val parts = meta.map(_.partitions).getOrElse(firstCreatePartitions)
-      require(meta.isEmpty || firstCreatePartitions.isEmpty ||
-        firstCreatePartitions == meta.get.partitions,
-        s"firstCreatePartitions $firstCreatePartitions do not match the " +
-          s"existing dataset's partitions ${meta.get.partitions}")
-      val deduped = df.dropDuplicates(keyCols)
-      val files = publish(spark, deduped, root, parts)
-      return (files, stateFpp.map(bloomOf(deduped, _)))
-    }
-    val m = meta.get
-    require(keyCols.forall(m.schema.fieldNames.contains),
-      "key columns must exist in the dataset schema")
-    // XxHash64 hashes the Int and Long forms of the same value differently
-    // — a batch/dataset key-type mismatch would make a carried filter
-    // disagree with the stored keys, and the append's schema check would
-    // refuse the rows only after the key scan. Fail fast instead.
-    keyCols.foreach { c =>
-      require(df.schema(c).dataType == m.schema(c).dataType,
-        s"key column $c: batch type ${df.schema(c).dataType} must equal " +
-          s"dataset type ${m.schema(c).dataType}")
-    }
-    val batch = df.dropDuplicates(keyCols)
-    // one column-pruned pass over the existing dataset: keys only
-    val existing = Fetch.fetch(spark, root).select(keyCols.map(col): _*)
-    val bloomBytes = stateFpp.map(fpp => knownBloom.getOrElse(bloomOf(existing, fpp)))
-    // null-safe equality: a redelivered null-keyed row must match its
-    // stored twin (plain = treats null keys as never-equal and would
-    // re-append them forever)
-    val ex = existing.select(keyCols.map(c => col(c).as(s"__ex_$c")): _*)
-    val cond = keyCols.map(c => batch(c) <=> ex(s"__ex_$c")).reduce(_ && _)
-    // ONE action materialises the new rows and observes their count and
-    // write sizing: the write and the state fold read the checkpoint
-    // instead of re-running the key scan and the anti-join
-    materialised(batch.join(ex, cond, "left_anti"), sizingMetrics(batch.schema, m.partitions)) {
-      (newRows, observed) =>
-        val sizing = observedSizing(observed)
-        if (sizing.exists(_.rows == 0)) (Nil, bloomBytes)
-        else {
-          // no observation: publish samples, and an empty sample writes nothing
-          val files = publishImpl(spark, newRows, root, m.partitions, "append",
-            Nil, Nil, 16, 0, Nil, emptyOk = true, sizing = sizing)
-          // fold the appended keys into the filter (same geometry) so the
-          // caller carries complete state into the next batch — one tiny
-          // pass over the checkpointed new rows, no dataset rescan
-          (files, bloomBytes.map { bytes =>
-            val (nh, nb, words) = graft.functions.ProbFilterOps.deserializeBloom(bytes)
-            val appended = newRows
-              .agg(graft.functions.ProbFilters.bloomAggSized(keyHash, nb, nh).as("b"))
-              .head().getAs[Array[Byte]]("b")
-            val (_, _, addWords) = graft.functions.ProbFilterOps.deserializeBloom(appended)
-            var i = 0
-            while (i < words.length) { words(i) |= addWords(i); i += 1 }
-            graft.functions.ProbFilterOps.serializeBloom(nh, nb, words)
-          })
+      require(keyCols.nonEmpty && keyCols.forall(df.columns.contains),
+        s"key columns ${keyCols.filterNot(df.columns.contains).mkString(",")} do not exist")
+      val meta = DatasetMeta.read(spark, root)
+      // Same guard as append-mode publish: data without a sidecar (a crashed
+      // earlier publish, or a foreign directory) must never be silently
+      // clobbered by the first-create overwrite path.
+      require(meta.nonEmpty || !Fetch.hasData(spark, root),
+        s"cannot dedup-append to $root: it contains data but no graft metadata " +
+          "(recover or republish with mode=overwrite)")
+      if (meta.isEmpty || !Fetch.hasData(spark, root)) {
+        val parts = meta.map(_.partitions).getOrElse(firstCreatePartitions)
+        require(meta.isEmpty || firstCreatePartitions.isEmpty ||
+          firstCreatePartitions == meta.get.partitions,
+          s"firstCreatePartitions $firstCreatePartitions do not match the " +
+            s"existing dataset's partitions ${meta.get.partitions}")
+        publish(spark, df.dropDuplicates(keyCols), root, parts)
+      } else {
+        val m = meta.get
+        require(keyCols.forall(m.schema.fieldNames.contains),
+          "key columns must exist in the dataset schema")
+        // a batch/dataset key-type mismatch would make the append's schema
+        // check refuse the rows only after the key scan: fail fast instead
+        keyCols.foreach { c =>
+          require(df.schema(c).dataType == m.schema(c).dataType,
+            s"key column $c: batch type ${df.schema(c).dataType} must equal " +
+              s"dataset type ${m.schema(c).dataType}")
         }
+        val batch = df.dropDuplicates(keyCols)
+        // one column-pruned pass over the existing dataset: keys only.
+        // Null-safe equality: a redelivered null-keyed row must match its
+        // stored twin (plain = treats null keys as never-equal and would
+        // re-append them forever)
+        val ex = Fetch.fetch(spark, root).select(keyCols.map(c => col(c).as(s"__ex_$c")): _*)
+        val cond = keyCols.map(c => batch(c) <=> ex(s"__ex_$c")).reduce(_ && _)
+        // ONE action materialises the new rows and observes their count and
+        // write sizing: the write reads the checkpoint instead of re-running
+        // the key scan and the anti-join
+        materialised(batch.join(ex, cond, "left_anti"), sizingMetrics(batch.schema, m.partitions)) {
+          (newRows, observed) =>
+            val sizing = observedSizing(observed)
+            if (sizing.exists(_.rows == 0)) Nil
+            // no observation: publish samples, and an empty sample writes nothing
+            else publishImpl(spark, newRows, root, m.partitions, "append",
+              Nil, Nil, 16, 0, Nil, emptyOk = true, sizing = sizing)
+        }
+      }
     }
-  }
 
   /** Z-value sort expression over `cols`: each column scales linearly from
     * its global [min, max] (one aggregate pass, collected as one row) onto

@@ -2135,27 +2135,13 @@ object Versions {
               .unionByName(
                 readFiles(spark, root, uncovSmall, meta, dvs = sliceDv(uncovSmall))
                   .withColumn(RowIdCol, lit(null).cast("long")))
-        val packed = packedRows.repartition(outParts)
-        // mapped datasets pack under PHYSICAL names like every live file
-        val physPacked =
-          if (meta.colMap.isEmpty) packed
-          else packed.select(packed.schema.fieldNames.toIndexedSeq.map(n =>
-            col(n).as(meta.physName(n))): _*)
         // every small-file row can be DV-deleted: the commit is then
-        // removal-only (it materializes the deletes), nothing to write
-        val newFiles =
-          if (packed.isEmpty) Nil
-          else Publish.publishImpl(spark, physPacked, root,
-            meta.partitions, "append", Nil, Nil, 16, 0, Nil,
-            requireSchemaMatch = meta.colMap.isEmpty, internalRewrite = true)
-        commit(spark, root, "rewrite", newFiles, meta, removedRel = small,
-          opInfo = Map("op" -> "OPTIMIZE", "mode" -> "small-files",
+        // removal-only (it materializes the deletes), nothing is written.
+        // OPTIMIZE moves committed rows: no constraint pass
+        Mutations.writeAndCommit(spark, root, meta, packedRows.repartition(outParts),
+          "rewrite", Map("op" -> "OPTIMIZE", "mode" -> "small-files",
             "under_bytes" -> smallBytes.toString),
-          baseVersion = Some(latest))
-        val idxCols = StatsIndex.indexedColumns(spark, root)
-        if (idxCols.nonEmpty && newFiles.nonEmpty)
-          StatsIndex.appendFiles(spark, root, newFiles, idxCols)
-        newFiles
+          latest, removed = small, validate = false)._2
       }
     }
 

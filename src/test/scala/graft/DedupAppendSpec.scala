@@ -6,11 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.SpanSugar._
 
 import graft.core.{Fetch, Publish}
-import graft.functions.ProbFilters
 
 /** Idempotent append: re-delivered rows never duplicate, genuinely new
-  * rows always land — also when a carried key filter's false positives
-  * claim them seen — within a fixed Spark action budget.
+  * rows always land, within a fixed Spark action budget.
   */
 class DedupAppendSpec extends AnyFunSuite with TimeLimits {
   private lazy val spark = TestSpark.spark
@@ -43,23 +41,6 @@ class DedupAppendSpec extends AnyFunSuite with TimeLimits {
     assert(got.select("id").distinct().count() == 600)
   }
 
-  test("aggressive fpp still exact: false positives corrected by the anti-join") {
-    val r = fresh("fpp")
-    def rows(lo: Long, hi: Long) = spark.range(lo, hi).toDF("id")
-    val (_, state) = Publish.publishDedupAppendWithState(spark, rows(0, 1000), r,
-      Seq("id"), fpp = 0.5)
-    // the carried fpp-0.5 filter falsely claims many never-stored keys
-    // seen; every one of them must still land through the exact path
-    val claimed = rows(1000, 2000)
-      .where(ProbFilters.mightContain(spark, xxhash64(col("id")), state)).count()
-    assert(claimed > 100, s"the filter should claim many new keys, claimed $claimed")
-    Publish.publishDedupAppendWithState(spark, rows(500, 2000), r, Seq("id"),
-      fpp = 0.5, knownBloom = Some(state))
-    val ids = Fetch.fetch(spark, r).select("id").as[Long].collect().sorted
-    assert(ids.length == 2000 && ids.head == 0L && ids.last == 1999L,
-      s"got ${ids.length} rows")
-  }
-
   test("null-keyed rows are idempotent too (null-safe anti-join)") {
     val r = fresh("nulls")
     val batch = Seq(Some(1L), Some(2L), None).toDF("id")
@@ -90,19 +71,16 @@ class DedupAppendSpec extends AnyFunSuite with TimeLimits {
     assert(spark.read.parquet(r).count() == 5, "pre-existing data must survive")
   }
 
-  test("carried bloom state skips the rebuild and stays exact across batches") {
-    val r = fresh("state")
+  test("overlapping batches then an exact redelivery: the redelivery writes no file") {
+    val r = fresh("chain")
     def rows(lo: Long, hi: Long) = spark.range(lo, hi).toDF("id")
-    val (_, s1) = Publish.publishDedupAppendWithState(spark, rows(0, 300), r, Seq("id"))
-    // second batch: overlap + new keys, probed against the carried filter
-    val (_, s2) = Publish.publishDedupAppendWithState(spark, rows(200, 500), r, Seq("id"),
-      knownBloom = Some(s1))
+    Publish.publishDedupAppend(spark, rows(0, 300), r, Seq("id"))
+    // second batch: overlap + new keys
+    Publish.publishDedupAppend(spark, rows(200, 500), r, Seq("id"))
     assert(Fetch.fetch(spark, r).count() == 500)
-    // exact redelivery against the FOLDED state must append nothing —
-    // proving the returned filter includes the keys batch 2 appended
-    val (files3, _) = Publish.publishDedupAppendWithState(spark, rows(0, 500), r, Seq("id"),
-      knownBloom = Some(s2))
-    assert(files3.isEmpty, "state must cover all appended keys")
+    // exact redelivery of everything stored must append nothing
+    val files3 = Publish.publishDedupAppend(spark, rows(0, 500), r, Seq("id"))
+    assert(files3.isEmpty, "a redelivery of stored keys must write no file")
     assert(Fetch.fetch(spark, r).select("id").distinct().count() == 500)
   }
 
