@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -21,9 +21,10 @@ final case class MutationResult(version: Int,
   * run ONE skeleton ([[copyOnWrite]]) in four phases:
   *   1. **Locate** — one distributed scan finds the distinct set of files
   *      that contain at least one affected row (`_metadata.file_path`,
-  *      column-pruned to the predicate/key columns). On a dataset where
-  *      the predicate touches 1 % of files, 99 % of the data is never
-  *      read again, let alone rewritten — this is what makes a
+  *      column-pruned to the predicate/key columns; a source's keys are
+  *      the build side of its semi-join, a broadcast while small). On a
+  *      dataset where the predicate touches 1 % of files, 99 % of the data
+  *      is never read again, let alone rewritten — this is what makes a
   *      row-level delete on 100 TB an O(affected data) operation.
   *   2. **Read affected** — only the affected files are re-read, deletion
   *      vectors applied, with their row ids when the dataset tracks rows.
@@ -37,14 +38,14 @@ final case class MutationResult(version: Int,
   *      previous version fully readable and the new files invisible;
   *      `vacuum` reclaims replaced files once history allows.
   *
-  * The copy-on-write action budget: the locate collect, then the write's
-  * sizing sample and the write itself — 3 actions for DELETE/UPDATE. The
-  * input checks add theirs: replaceWhere's stray-row probe (and, scoped
-  * to partitions, a path-resolved locate in place of the scan), MERGE's
-  * source-key uniqueness check, APPLY CHANGES' op check plus uniqueness
-  * check — 4 for replaceWhere and MERGE, 5 for APPLY CHANGES. A dataset
-  * with CHECK constraints adds the constraint pass, one with a stats
-  * index its index read and maintenance.
+  * The copy-on-write action budget: the locate, then the write's sizing
+  * sample and the write itself — 3 actions for DELETE/UPDATE. A path that
+  * takes rows in (MERGE, APPLY CHANGES, replaceWhere) runs its input
+  * checks — the source-key uniqueness check, APPLY CHANGES' op check,
+  * replaceWhere's stray-row check — in the locate's own execution, which
+  * also observes the source's write sizing: 2 actions, the write sized
+  * from the source. A dataset with CHECK constraints adds the constraint
+  * pass, one with a stats index its index read and maintenance.
   *
   * The deletion-vector variants ([[deleteWhereDv]], [[updateWhereDv]],
   * [[mergeDv]]) have a fixed action budget: ONE locate-and-DV-write
@@ -52,9 +53,9 @@ final case class MutationResult(version: Int,
   * files and, for UPDATE, the row count and write sizing of the updated
   * copies — then, for UPDATE/MERGE, one data write through the same
   * [[writeAndCommit]] tail. MERGE's source-key uniqueness check is its
-  * one extra action and observes the source's row count and sizing. A DV
-  * lookup the session has not built yet (the first read of a new DV set)
-  * adds one action.
+  * one extra action and observes the source's row count and sizing. The
+  * DV lookup a read builds for a new DV set reads the sidecars on the
+  * driver, without an action.
   *
   * Concurrency is OPTIMISTIC at file granularity (the Delta conflict-
   * detection shape, since r15): mutations take NO lock — each computes
@@ -106,13 +107,6 @@ object Mutations {
     Base(latest, meta, dvs, df)
   }
 
-  /** The root-relative files containing at least one row of `affected`
-    * (tiny: O(number of matching files), collected driver-side exactly
-    * like every other file listing).
-    */
-  private def affectedFiles(affected: DataFrame): Seq[String] =
-    affected.select(FileCol).distinct().collect().map(_.getString(0)).toSeq.sorted
-
   /** Row tracking's mutation contract: when the dataset is tracked AND
     * every live file carries a base (post-backfill), mutations MATERIALIZE
     * surviving/updated rows' ids into their rewritten files — Some(bases)
@@ -153,8 +147,87 @@ object Mutations {
   private def requireUniqueKeys(what: String, df: DataFrame, keyCols: Seq[String]): Unit = {
     val dup = df.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("__graft_n"))
       .where(col("__graft_n") > 1).limit(1).collect().headOption
+    requireUnique(what, keyCols, dup)
+  }
+
+  private def requireUnique(what: String, keyCols: Seq[String], dup: Option[Row]): Unit =
     require(dup.isEmpty,
       s"$what is not unique on (${keyCols.mkString(",")}): e.g. ${dup.getOrElse("")}")
+
+  /** An input check on a source: `flags` marks an offending row, and
+    * `message` names one by its `shown` columns.
+    */
+  private final case class Check(flags: Column, shown: Seq[Column], message: Row => String)
+
+  /** What a source-driven mutation takes in, as its locate checks it:
+    * `rows`, the normalised source; `keyCols`, the key it must be unique
+    * on (none: no uniqueness check); `checks`, run before the uniqueness
+    * check; `written`, the source rows the rewrite writes — every one of
+    * them lands in the replacement, so any such row makes it non-empty.
+    */
+  private final case class Source(what: String, rows: DataFrame,
+                                  keyCols: Seq[String] = Nil, checks: Seq[Check] = Nil,
+                                  written: Option[Column] = None)
+
+  /** `src`'s check verdicts as aggregates over a frame of `rows` (the
+    * source, or a frame of it): per check, the `shown` columns of a row it
+    * flags, then a duplicate key tuple with its count — each null when
+    * nothing offends. With a key to check, the frame is `rows` grouped by
+    * it.
+    */
+  private def verdicts(src: Source, rows: DataFrame): (DataFrame, Seq[Column]) = {
+    val checks = src.checks.indices.map(i => s"__graft_check$i")
+    val perRow = src.checks.zip(checks).map { case (c, name) =>
+      first(when(c.flags, struct(c.shown: _*)), ignoreNulls = true).as(name) }
+    if (src.keyCols.isEmpty) (rows, perRow :+ count(lit(1)).as("__graft_n"))
+    else (rows.groupBy(src.keyCols.map(col): _*).agg(count(lit(1)).as("__graft_n"), perRow: _*),
+      first(when(col("__graft_n") > 1, struct((src.keyCols :+ "__graft_n").map(col): _*)),
+        ignoreNulls = true).as("__graft_dup") +:
+        checks.map(c => first(col(c), ignoreNulls = true).as(c)))
+  }
+
+  /** Fail the call on the first check `verdict` reports. */
+  private def requireChecked(src: Source, verdict: Map[String, Any]): Unit = {
+    def shown(name: String) = verdict.get(name).flatMap(Option(_)).map(_.asInstanceOf[Row])
+    src.checks.zipWithIndex.foreach { case (c, i) =>
+      val flagged = shown(s"__graft_check$i")
+      require(flagged.isEmpty, flagged.map(c.message).getOrElse(""))
+    }
+    if (src.keyCols.nonEmpty) requireUnique(src.what, src.keyCols, shown("__graft_dup"))
+  }
+
+  /** The locate of a copy-on-write mutation and the checks of its source
+    * as ONE execution into the no-op sink, whose observations carry the
+    * distinct [[FileCol]] values of `files`, the verdicts ([[verdicts]])
+    * and the write sizing of the source's written rows. An observation
+    * missing from the plan is recomputed by an action of its own (the
+    * sizing is then left to the write). Fails the call on a verdict;
+    * returns the affected files and the source's sizing.
+    */
+  private def locate(files: DataFrame, source: Option[Source],
+                     meta: DatasetMeta): (Seq[String], Option[Publish.WriteSizing]) = {
+    val fileSet = collect_set(FileCol).as("__graft_files")
+    val (filesObs, verdictObs, sizingObs) = (Observation(), Observation(), Observation())
+    val checked = source.map { s =>
+      val aggs = Publish.sizingMetrics(meta.schema, meta.partitions, s.written)
+      val (frame, checks) = verdicts(s, s.rows.observe(sizingObs, aggs.head, aggs.tail: _*))
+      frame.observe(verdictObs, checks.head, checks.tail: _*)
+    }
+    (files.observe(filesObs, fileSet) +: checked.toSeq)
+      .map(_.select(lit(0).as("__graft_locate"))).reduce(_.unionByName(_))
+      .write.format("noop").mode("overwrite").save()
+    def observed(o: Observation, orElse: => DataFrame): Map[String, Any] =
+      Some(o.get).filter(_.nonEmpty).getOrElse {
+        val r = orElse.head()
+        r.getValuesMap[Any](r.schema.fieldNames.toSeq)
+      }
+    source.foreach { s =>
+      val (frame, checks) = verdicts(s, s.rows)
+      requireChecked(s, observed(verdictObs, frame.agg(checks.head, checks.tail: _*)))
+    }
+    val affected = observed(filesObs, files.agg(fileSet))("__graft_files")
+      .asInstanceOf[Seq[String]].sorted
+    (affected, source.flatMap(_ => Publish.observedSizing(sizingObs.get)))
   }
 
   /** The source contract of every path that takes rows in: the key
@@ -178,6 +251,15 @@ object Mutations {
     source.select(schema.fields.toIndexedSeq.map(f =>
       col(f.name).cast(f.dataType).as(f.name)) ++ passThrough.map(col): _*)
   }
+
+  /** `body` over `source`, cached for the several actions that read it —
+    * unless it is a driver-local relation, which they re-read for free.
+    */
+  private def cachedSource[T](source: DataFrame)(body: DataFrame => T): T =
+    source.queryExecution.optimizedPlan match {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => body(source)
+      case _ => source.persist(); try body(source) finally source.unpersist()
+    }
 
   /** The UPDATE projection over `meta`'s columns: each assigned column
     * takes its expression cast to the declared type — only on rows where
@@ -258,7 +340,8 @@ object Mutations {
     *     listing, and no listing runs. An empty `rows` (a delete that
     *     emptied its files) writes nothing — the write's own sizing
     *     sample answers emptiness, or `sizing`, when an earlier action
-    *     observed it over `rows`, replaces that sample;
+    *     observed it over `rows` or over a source that stands for them,
+    *     replaces that sample;
     *   - the write maintains the stats index (for the columns it covers)
     *     and the bloom index once for the new files, before the commit;
     *   - [[preCommitHook]] runs, then ONE `kind` entry commits the new
@@ -316,36 +399,55 @@ object Mutations {
 
   /** The copy-on-write skeleton (phases in the object doc):
     *   1. locate — the distinct files holding a row of
-    *      `matching(base.rows)`, or `scoped`, files the caller resolved
-    *      from the log's paths without a scan;
-    *   2. read affected — when nothing matched and `inserts` holds no row,
-    *      the mutation is a no-op that commits nothing. Otherwise the
+    *      `matching(base.rows)`, or of `scoped`, files the caller resolved
+    *      from the log's paths without a scan. A `source` is checked in the
+    *      same execution ([[verdicts]]), which fails the call before
+    *      anything is written and observes the source's write sizing;
+    *   2. read affected — when nothing matched and the source writes no
+    *      row, the mutation is a no-op that commits nothing. Otherwise the
     *      affected files are re-read, with their row ids when every one of
     *      them is covered (coverage scoped to the affected files);
     *   3. rewrite — `rewrite` turns them into the replacement rows;
-    *   4. commit — [[writeAndCommit]] swaps the affected files for the
-    *      replacement's in one `rewrite` entry, guarded by `matching` as
-    *      the OCC read set ([[addedReadGuard]]), under `base.meta`: files
-    *      that landed concurrently cannot carry an evolving merge's new
-    *      columns.
+    *   4. commit — `beforeWrite` runs, then [[writeAndCommit]] swaps the
+    *      affected files for the replacement's in one `rewrite` entry,
+    *      guarded by `matching` as the OCC read set ([[addedReadGuard]]),
+    *      under `base.meta`: files that landed concurrently cannot carry an
+    *      evolving merge's new columns.
+    * The write is sized from the source: it has the dataset's columns, so
+    * its bytes per row stand for the replacement's, and the replacement
+    * spans at least its partition tuples and the affected files' dirs.
+    * Without a source, when the source writes no row (the sample then
+    * answers whether the replacement is empty), or when Spark dropped the
+    * observation from a plan it proved empty, the write samples its own
+    * sizing.
     * `evolved`: the metadata the commit records when a merge evolved the
     * schema.
     */
   private def copyOnWrite(spark: SparkSession, root: String, base: Base,
                           matching: DataFrame => DataFrame, opInfo: Map[String, String],
-                          inserts: Option[DataFrame] = None,
-                          scoped: Option[Seq[String]] = None,
-                          evolved: Option[DatasetMeta] = None)(
+                          source: Option[Source] = None,
+                          scoped: Option[DataFrame] = None,
+                          evolved: Option[DatasetMeta] = None,
+                          beforeWrite: () => Unit = () => ())(
                           rewrite: Affected => DataFrame): MutationResult = {
-    val affected = scoped.getOrElse(affectedFiles(matching(base.rows)))
-    if (affected.isEmpty && inserts.forall(_.isEmpty)) MutationResult(base.version, Nil, Nil)
+    val meta = evolved.getOrElse(base.meta)
+    val (affected, sized) = locate(scoped.getOrElse(matching(base.rows)), source, meta)
+    val inserts = source.exists(s => sized.fold(
+      !s.written.fold(s.rows)(s.rows.where(_)).isEmpty)(_.rows > 0))
+    if (affected.isEmpty && !inserts) MutationResult(base.version, Nil, Nil)
     else {
       val bases = liveBases(spark, root, base.version, affected)
       val target = new Affected(() => Versions.readFiles(spark, root, affected,
         base.meta, dvs = base.dvs, keepRowId = bases.map(_ => RowIdCol),
         rowIdBases = bases.getOrElse(Map.empty)), bases.isDefined)
-      writeAndCommit(spark, root, evolved.getOrElse(base.meta), rewrite(target), "rewrite",
-        opInfo, base.version, removed = affected, schemaEvolved = evolved.isDefined,
+      val dirs = affected.map(f => f.substring(0, math.max(0, f.lastIndexOf('/')))).distinct.size
+      val sizing = sized.filter(_.rows > 0).map(s => s.copy(
+        bytesPerRow = s.bytesPerRow + target.ids.size * 8,
+        partitionTuples = math.max(s.partitionTuples, dirs.toLong)))
+      beforeWrite()
+      writeAndCommit(spark, root, meta, rewrite(target), "rewrite",
+        opInfo, base.version, removed = affected, sizing = sizing,
+        schemaEvolved = evolved.isDefined,
         readConflict = addedReadGuard(spark, root, base.meta, matching))._1
     }
   }
@@ -356,13 +458,21 @@ object Mutations {
     * nothing are inserted. Row tracking: a replaced row keeps the TARGET
     * row's id (threaded through the join as a struct field taken from the
     * target side); inserts carry null, i.e. fresh computed ids.
+    *
+    * Neither join moves the affected rows: they stream past the source
+    * (a broadcast while it is small) in a left outer join, and the inserts
+    * are the source anti-joined to their keys alone. Every copy of a
+    * duplicated target key is replaced, and a null key matches nothing.
     */
   private def upsertByKey(target: Affected, source: DataFrame, keyCols: Seq[String],
                           schema: StructType): DataFrame = {
     val payload = schema.fieldNames.toSeq.filterNot(keyCols.contains)
+    val rows = target.rows
+    def inserted = source.join(rows.select(keyCols.map(col): _*), keyCols, "left_anti")
+      .select(col("*") +: target.freshIds: _*)
     if (payload.isEmpty && !target.tracked)
       // keys-only dataset: upsert degenerates to set union
-      target.rows.unionByName(source).distinct()
+      rows.unionByName(source).distinct()
     else if (payload.isEmpty) {
       // Match the untracked branch's SET semantics exactly (it does
       // union+distinct): pre-existing duplicate key tuples in the affected
@@ -374,19 +484,19 @@ object Mutations {
       // depend on the orthogonal row-tracking table property.
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(keyCols.map(col): _*).orderBy(col(RowIdCol).asc)
-      target.rows.withColumn("_rn", row_number().over(w))
+      rows.withColumn("_rn", row_number().over(w))
         .where(col("_rn") === 1).drop("_rn")
-        .unionByName(source.join(target.rows.select(keyCols.map(col): _*),
-          keyCols, "left_anti").select(col("*") +: target.freshIds: _*))
+        .unionByName(inserted)
     } else {
       def packed(df: DataFrame, tag: String, id: Seq[Column]) =
         df.select(keyCols.map(col) :+ struct(payload.map(col) ++ id: _*).as(tag): _*)
-      packed(target.rows, "_t", target.ids)
-        .join(packed(source, "_s", target.freshIds), keyCols, "full_outer")
+      packed(rows, "_t", target.ids)
+        .join(packed(source, "_s", target.freshIds), keyCols, "left_outer")
         .withColumn("_m", coalesce(col("_s"), col("_t")))
         .select(schema.fieldNames.toIndexedSeq.map(n =>
           if (keyCols.contains(n)) col(n) else col("_m")(n).as(n)) ++
           target.ids.map(_ => col("_t")(RowIdCol).as(RowIdCol)): _*)
+        .unionByName(inserted)
     }
   }
 
@@ -451,12 +561,9 @@ object Mutations {
     val base = snapshotWithPath(spark, root)
     val meta = base.meta
     val src = normalised("replaceWhere data", data, meta.schema)
-    val stray = src.where(!(predicate <=> lit(true))).limit(1).collect()
-    require(stray.isEmpty,
+    val stray = Check(!(predicate <=> lit(true)), src.columns.toSeq.map(col), r =>
       s"replaceWhere data contains rows NOT matching the predicate " +
-        s"(e.g. ${stray.headOption.getOrElse("")}) — the write may only " +
-        "produce rows inside the range it replaces")
-
+        s"(e.g. $r) — the write may only produce rows inside the range it replaces")
     val refs = predicateRefs(spark, meta.schema, predicate)
     val (liveFiles, _, _) = Versions.snapshotFullAt(spark, root, base.version)
     // a spec-EVOLVED snapshot carries old-epoch files that lack the
@@ -479,7 +586,6 @@ object Mutations {
     // Hive-escaped values unescape through the exact routine the writer
     // used; the null partition dir maps to null.
     val scoped = Option.when(partitionScoped) {
-      import org.apache.spark.sql.Row
       import org.apache.spark.sql.types.{StringType, StructField}
       import scala.jdk.CollectionConverters._
       val raw: Seq[Row] = liveFiles.map { rel =>
@@ -496,12 +602,13 @@ object Mutations {
         .select(col("__file") +: meta.partitions.map(p =>
           col(p).cast(meta.schema(p).dataType).as(p)): _*)
         .where(predicate <=> lit(true))
-        .select("__file").collect().map(_.getString(0)).toSeq.sorted
+        .select(col("__file").as(FileCol))
     }
     copyOnWrite(spark, root, base, _.where(predicate),
         Map("op" -> "REPLACE WHERE", "predicate" -> predSql(predicate),
           "partition_scoped" -> partitionScoped.toString),
-        inserts = Some(src), scoped = scoped) { a =>
+        source = Some(Source("replaceWhere data", src, checks = Seq(stray))),
+        scoped = scoped) { a =>
       val inserted = src.select(col("*") +: a.freshIds: _*)
       if (partitionScoped) inserted
       else a.rows.where(not(predicate <=> lit(true))).unionByName(inserted)
@@ -637,8 +744,7 @@ object Mutations {
       .flatMap(v => liveBases(spark, root, v))
     val Base(latest, meta, _, snap) =
       snapshotWithPath(spark, root, withRowIndex = true, rowIdBases = bases)
-    val src = normalised("merge source", source, meta.schema, keyCols).persist()
-    try {
+    cachedSource(normalised("merge source", source, meta.schema, keyCols)) { src =>
       // the duplicate-key check scans all of src: it also observes the
       // emptiness and write sizing of the appended rows (src, plus the
       // fixed-width row id when tracked)
@@ -669,7 +775,7 @@ object Mutations {
           latest, dvs = dv.toSeq, sizing = sizing,
           readConflict = addedReadGuard(spark, root, meta, keyed(src, keyCols)))._1
       }
-    } finally src.unpersist()
+    }
   }
 
   /** UPDATE root SET assignments WHERE predicate. Rows where the
@@ -708,23 +814,20 @@ object Mutations {
     require(changes.columns.contains(opCol),
       s"changes must carry the operation column $opCol")
     val base = snapshotWithPath(spark, root)
-    val normalized = normalised("change batch", changes, base.meta.schema, keyCols,
-      passThrough = Seq(opCol)).persist()
-    try {
-      val badOp = normalized
-        .where(col(opCol).isNull || !col(opCol).isin("upsert", "delete"))
-        .select(opCol).limit(1).collect()
-      require(badOp.isEmpty,
-        s"unknown $opCol value ${badOp.headOption.getOrElse("")}; expected upsert|delete")
-      requireUniqueKeys("change batch", normalized, keyCols)
-      val ups = normalized.where(col(opCol) === "upsert").drop(opCol)
+    cachedSource(normalised("change batch", changes, base.meta.schema, keyCols,
+        passThrough = Seq(opCol))) { normalized =>
+      val badOp = Check(col(opCol).isNull || !col(opCol).isin("upsert", "delete"),
+        Seq(col(opCol)), r => s"unknown $opCol value $r; expected upsert|delete")
+      val upsert = col(opCol) === "upsert"
+      val ups = normalized.where(upsert).drop(opCol)
       val delKeys = normalized.where(col(opCol) === "delete")
         .select(keyCols.map(col): _*)
       copyOnWrite(spark, root, base, keyed(normalized, keyCols),
           Map("op" -> "APPLY CHANGES", "keys" -> keyCols.mkString(",")),
-          inserts = Some(ups))(
+          source = Some(Source("change batch", normalized, keyCols, Seq(badOp),
+            written = Some(upsert))))(
         a => upsertByKey(a, ups, keyCols, base.meta.schema).join(delKeys, keyCols, "left_anti"))
-    } finally normalized.unpersist()
+    }
   }
 
   /** MERGE INTO root USING source ON keyCols — upsert: a target row whose
@@ -781,12 +884,7 @@ object Mutations {
         (meta0.copy(schema = w), widened)
       }
     // normalize source to (evolved) target order + types, once
-    val src = normalised("merge source", source, meta.schema, keyCols)
-    // stale bloom filters on a widened column would false-skip files
-    if (widenedCols.nonEmpty) BloomIndex.invalidateFor(spark, root, widenedCols)
-    src.persist()
-    try {
-      requireUniqueKeys("merge source", src, keyCols)
+    cachedSource(normalised("merge source", source, meta.schema, keyCols)) { src =>
       // affected target rows under the OLD schema, null-extended to the
       // evolved one (their files predate the new columns) and UPCAST to
       // any widened types so both merge sides agree
@@ -798,9 +896,14 @@ object Mutations {
           else col(n)): _*)
       }
       copyOnWrite(spark, root, base, keyed(src, keyCols),
-          Map("op" -> "MERGE", "keys" -> keyCols.mkString(",")), inserts = Some(src),
-          evolved = Some(meta).filter(_ => extraF.nonEmpty || widenedCols.nonEmpty))(
+          Map("op" -> "MERGE", "keys" -> keyCols.mkString(",")),
+          source = Some(Source("merge source", src, keyCols)),
+          evolved = Some(meta).filter(_ => extraF.nonEmpty || widenedCols.nonEmpty),
+          // stale bloom filters on a widened column would false-skip
+          // files; dropped only once the source passed its checks
+          beforeWrite = () =>
+            if (widenedCols.nonEmpty) BloomIndex.invalidateFor(spark, root, widenedCols))(
         a => upsertByKey(a.map(evolve), src, keyCols, meta.schema))
-    } finally src.unpersist()
+    }
   }
 }

@@ -122,13 +122,17 @@ object Publish {
   /** The [[WriteSizing]] facts as aggregates for `Dataset.observe` over
     * the rows about to be written (of `schema`): an action that already
     * scans those rows then sizes the write for free. Read back with
-    * [[observedSizing]].
+    * [[observedSizing]]. `only`: when given, just the rows it is TRUE on
+    * count (the scanned frame also carries rows the write drops).
     */
-  private[graft] def sizingMetrics(schema: StructType, partitions: Seq[String]): Seq[Column] =
-    Seq(count(lit(1)).as("__graft_rows"), sum(rowBytes(schema)).as("__graft_bytes")) ++
+  private[graft] def sizingMetrics(schema: StructType, partitions: Seq[String],
+                                   only: Option[Column] = None): Seq[Column] = {
+    def kept(c: Column): Column = only.fold(c)(when(_, c))
+    Seq(count(kept(lit(1))).as("__graft_rows"), sum(kept(rowBytes(schema))).as("__graft_bytes")) ++
       (if (partitions.isEmpty) Nil
-       else Seq(approx_count_distinct(struct(partitions.map(quoted): _*))
+       else Seq(approx_count_distinct(kept(struct(partitions.map(quoted): _*)))
          .as("__graft_parts")))
+  }
 
   /** None when the action carried no observation: Spark drops it from a
     * plan it proved empty, so a missing metric must not be read as zero
@@ -499,8 +503,9 @@ object Publish {
     * `emptyOk = true` returns None for an empty frame instead of
     * throwing — internal rewrite paths use it so "the delete removed
     * every row of the affected files" costs no extra emptiness probe.
-    * `sizing`: facts a caller already observed over exactly these rows
-    * (see [[sizingMetrics]]); the sizing sample is then skipped.
+    * `sizing`: facts a caller already observed over these rows, or over
+    * rows of the same schema that stand for them (see [[sizingMetrics]]);
+    * the sizing sample is then skipped.
     */
   private[core] def prepareForWrite(spark: SparkSession, df: DataFrame,
                                     partitions: Seq[String], sortCols: Seq[String],

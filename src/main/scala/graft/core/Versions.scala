@@ -1556,25 +1556,50 @@ object Versions {
     * string ([[dvScanKeys]] forms) to a sorted array of deleted row
     * indexes — one hash probe + binary search per covered row, evaluated
     * INSIDE WholeStageCodegen: no join, no exchange, no second frame.
-    * Built from one tiny pass over the O(deleted rows) sidecars, memoized
-    * per immutable DV-dir set.
+    * Built from the O(deleted rows) sidecars, read on the driver that
+    * holds the table anyway (no Spark job), memoized per immutable DV-dir
+    * set.
     */
   private[core] def dvInlinePredicate(spark: SparkSession, root: String,
                                       dvs: Seq[DvRef], fileTmpCol: String,
                                       idxTmpCol: String): Option[org.apache.spark.sql.Column] = {
     val key = (qualifiedRootUri(spark, root), dvs.map(_.dir).sorted)
     val lookup = dvLookupMemo.computeIfAbsent(key, _ => {
-      val dvRows = dvs.map(d => spark.read.schema(DvSchema)
-          .parquet(new Path(root, d.dir).toString))
-        .reduce(_.unionByName(_))
-      // one action: the row cap rides the grouped collect (past it the
-      // collected rows are dropped and the anti-join path takes over)
-      val grouped = dvRows.limit(dvInlineMax(spark).toInt + 1).groupBy("file")
-        .agg(sort_array(collect_list("row_index")).as("idxs")).collect()
-      val relArr = grouped.map(r =>
-        r.getString(0) -> r.getSeq[Long](1).toArray).toMap
-      if (relArr.valuesIterator.map(_.length.toLong).sum > dvInlineMax(spark)) None
+      // one driver thread per sidecar part (bounded); past the row cap
+      // the reads stop and the anti-join path takes over
+      val cap = dvInlineMax(spark)
+      val conf = spark.sparkContext.hadoopConfiguration
+      val parts = dvs.flatMap(d => fs(spark, root).listStatus(new Path(root, d.dir)))
+        .map(_.getPath).filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+      val rows = new java.util.concurrent.atomic.AtomicLong(0)
+      def idxsByFile(part: Path): Map[String, Array[Long]] = {
+        val byFile = scala.collection.mutable.HashMap[String, scala.collection.mutable.ArrayBuilder.ofLong]()
+        val rdr = org.apache.parquet.hadoop.ParquetReader.builder(
+          new org.apache.parquet.hadoop.example.GroupReadSupport(), part).withConf(conf).build()
+        try {
+          var g = rdr.read()
+          while (g != null && rows.incrementAndGet() <= cap) {
+            byFile.getOrElseUpdate(g.getString("file", 0),
+              new scala.collection.mutable.ArrayBuilder.ofLong) += g.getLong("row_index", 0)
+            g = rdr.read()
+          }
+        } finally rdr.close()
+        byFile.map { case (f, b) => f -> b.result() }.toMap
+      }
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.max(1, math.min(8, parts.size)))
+      val perPart = try {
+        import scala.jdk.CollectionConverters._
+        pool.invokeAll(parts.map(p => new java.util.concurrent.Callable[Map[String, Array[Long]]] {
+          def call(): Map[String, Array[Long]] = idxsByFile(p)
+        }).asJava).asScala.toSeq.map(_.get())
+      } finally pool.shutdown()
+      if (rows.get > cap) None
       else {
+        val relArr = perPart.flatten.groupMapReduce(_._1)(_._2)(_ ++ _).map { case (f, idxs) =>
+          java.util.Arrays.sort(idxs)
+          f -> idxs
+        }
         val entries = dvScanKeys(spark, root, relArr.keys.toSeq)
           .flatMap { case (rel, k) => relArr.get(rel).map(k -> _) }.toArray
         Some(new graft.functions.DvLookup(entries))

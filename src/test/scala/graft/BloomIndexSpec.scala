@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{BloomIndex, ColFilter, DatasetMeta, Fetch, Publish, StatsIndex}
+import graft.core.{BloomIndex, ColFilter, DatasetMeta, Fetch, Mutations, Publish, StatsIndex}
 
 /** Per-file Bloom skipping: must (1) never change results, (2) prune files
   * on equality probes where min/max ranges cannot (randomly-laid-out
@@ -193,5 +193,23 @@ class BloomIndexSpec extends AnyFunSuite {
     assert(p.columns == Seq("l_orderkey", "l_okstr"))
     assert(p.fpp == 0.01 && p.expectedItemsPerFile == 8192)
     assert(BloomIndex.params(spark, "/tmp/graft_test/no_such_ds").isEmpty)
+  }
+
+  test("a widening merge refused for duplicate source keys keeps the bloom index") {
+    val spark = this.spark
+    import spark.implicits._
+    val root = TestSpark.tmpDir("bloom_widen_refused")
+    Publish.publishVersioned(spark, (0 until 40).map(i => (i, s"g${i % 2}", i * 1.0))
+      .toDF("id", "grp", "v").select(col("id").cast("int"), col("grp"), col("v")),
+      root, Seq("grp"))
+    BloomIndex.build(spark, root, Seq("id"))
+    // the source widens the indexed int column to long, and repeats a key
+    val dup = Seq((5L, "g1", -1.0), (5L, "g1", -2.0)).toDF("id", "grp", "v")
+    val e = intercept[IllegalArgumentException] {
+      Mutations.merge(spark, root, dup, Seq("id"), evolveSchema = true)
+    }
+    assert(e.getMessage.contains("merge source is not unique on (id)"))
+    assert(BloomIndex.params(spark, root).isDefined,
+      "a merge that wrote nothing must not drop the index")
   }
 }

@@ -34,6 +34,31 @@ class ConditionalCreateSpec extends AnyFunSuite {
     }
   }
 
+  /** Forces a lost CAS: the first create waits (at most 60 s) until
+    * another committer is blocked on the monitor it holds — the in-JVM
+    * commit monitor around the create. That committer resolved its version
+    * while the first entry was still absent, so it targets the same
+    * version, and its create must lose once the first lands.
+    */
+  private class FirstCreateWaits(inner: ConditionalCreate) extends ConditionalCreate {
+    private val held = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val raced = new java.util.concurrent.atomic.AtomicBoolean(false)
+    override def createIfAbsent(fs: FileSystem, path: Path,
+                                bytes: Array[Byte]): Boolean = {
+      if (held.compareAndSet(false, true)) {
+        val mx = java.lang.management.ManagementFactory.getThreadMXBean
+        val me = Thread.currentThread().getId
+        val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(60)
+        while (!raced.get() && System.nanoTime() < deadline) {
+          raced.set(mx.getThreadInfo(mx.getAllThreadIds).exists(i =>
+            i != null && i.getLockOwnerId == me))
+          if (!raced.get()) Thread.sleep(5)
+        }
+      }
+      inner.createIfAbsent(fs, path, bytes)
+    }
+  }
+
   /** The plain-S3 shape: existence check, then an unconditional PUT that
     * last-writer-wins. `hold` widens the check→put window so two callers
     * interleave deterministically.
@@ -56,7 +81,8 @@ class ConditionalCreateSpec extends AnyFunSuite {
     Publish.publishVersioned(spark,
       Seq((0L, 0.0)).toDF("id", "v"), root, Nil)
     val impl = new NioAtomicCreate
-    val prev = Versions.installConditionalCreate(impl)
+    val race = new FirstCreateWaits(impl)
+    val prev = Versions.installConditionalCreate(race)
     try {
       val pool = Executors.newFixedThreadPool(6)
       val go = new CountDownLatch(1)
@@ -77,6 +103,8 @@ class ConditionalCreateSpec extends AnyFunSuite {
     assert(Versions.latestVersion(spark, root).contains(7))
     assert((1 to 7).map(v => Versions.readEntry(spark, root, v).version) == (1 to 7))
     assert(Fetch.fetch(spark, root).count() == 7)
+    assert(race.raced.get(), "a second committer must have raced the first create")
+    // six wins plus the forced loss
     assert(impl.calls.get() >= 7, "the installed seam must have served the creates")
   }
 

@@ -21,6 +21,11 @@ With --trace both sides run with `--trace 1` and the summary covers the
 per_layer metrics of BENCHMARK.json instead, so a claim about a named layer
 is shown paired too (wins counted by each metric's `better`).
 
+--spans NAME[,NAME] (with --trace) also reads each traced run's
+.bench_build/work/<workload>/report.json and prints, per named span, each
+side's median ms (of the per-run medians, and pooled over every call) and
+Spark jobs per call, with the pairs whose median the change lowered.
+
 Nothing under perfbench/ is modified: each run writes only the checkout's
 own .bench_build/ directory. Worktrees are removed at the end unless --keep.
 """
@@ -71,6 +76,57 @@ def run_once(checkout, workload, seed, seconds, trace):
         sys.stderr.write(p.stderr[-2000:])
         return None
     return json.loads(lines[-1])
+
+
+def span_stats(checkout, workload, names):
+    """{span: {"ms": [per-call ms], "jobs": [per-call Spark jobs]}} of the
+    named spans in the checkout's last run of the workload; a call's jobs
+    include those of the spans nested in it."""
+    path = os.path.join(checkout, ".bench_build", "work", workload, "report.json")
+    try:
+        with open(path) as f:
+            spans = json.load(f)["spans"]
+    except (OSError, ValueError, KeyError):
+        return {}
+    children = {}
+    for sp in spans:
+        children.setdefault(sp["parent"], []).append(sp)
+
+    def jobs(sp):
+        return len(sp["jobs"]) + sum(jobs(c) for c in children.get(sp["id"], []))
+
+    out = {}
+    for sp in spans:
+        if sp["name"] in names:
+            got = out.setdefault(sp["name"], {"ms": [], "jobs": []})
+            got["ms"].append((sp["t1_ns"] - sp["t0_ns"]) / 1e6)
+            got["jobs"].append(jobs(sp))
+    return out
+
+
+def summarize_spans(workload, pairs, names):
+    """Per-span lines: median ms and jobs per call of each side, paired
+    wins on the per-run median ms."""
+    out = [f"== {workload}: spans over {len(pairs)} pairs"]
+    out.append(f"{'span':<26}{'base median [q1, q3] ms':<36}{'change median [q1, q3] ms':<36}"
+               f"{'pooled ms':>20}{'jobs/call':>14}{'delta':>9}{'wins':>8}")
+    for name in names:
+        rows = [(p["base"]["spans"][name], p["change"]["spans"][name]) for p in pairs
+                if name in p["base"].get("spans", {}) and name in p["change"].get("spans", {})]
+        if not rows:
+            out.append(f"{name:<26}no calls on both sides")
+            continue
+        med = [(statistics.median(b["ms"]), statistics.median(c["ms"])) for b, c in rows]
+        bq = quartiles([m[0] for m in med])
+        cq = quartiles([m[1] for m in med])
+        pooled = [statistics.median([x for r in rows for x in r[i]["ms"]]) for i in (0, 1)]
+        jobs = [statistics.mean([x for r in rows for x in r[i]["jobs"]]) for i in (0, 1)]
+        wins = sum(1 for b, c in med if c < b)
+        delta = (cq[1] - bq[1]) / bq[1] if bq[1] else 0.0
+        out.append(f"{name:<26}{fmt(bq):<36}{fmt(cq):<36}"
+                   f"{pooled[0]:>9.0f} -> {pooled[1]:<6.0f}{jobs[0]:>6.1f} -> {jobs[1]:<4.1f}"
+                   f"{delta:>+9.1%}{wins:>5}/{len(rows)}")
+    return "\n".join(out)
 
 
 def quartiles(vals):
@@ -124,11 +180,16 @@ def main():
     ap.add_argument("--seconds", type=int, default=20)
     ap.add_argument("--trace", action="store_true",
                     help="run traced and summarise the per-layer metrics")
+    ap.add_argument("--spans", default="",
+                    help="with --trace: comma-separated span names to summarise per call")
     ap.add_argument("--out", help="write every run's JSON line here (after each pair)")
     ap.add_argument("--workdir", help="parent directory of the worktrees (default: a temp dir)")
     ap.add_argument("--keep", action="store_true", help="keep the worktrees")
     a = ap.parse_args()
 
+    spans = [n for n in a.spans.split(",") if n]
+    if spans and not a.trace:
+        ap.error("--spans needs --trace")
     seeds = [int(s) for s in a.seeds.split(",") if s] or list(range(1, a.pairs + 1))
     tmp = tempfile.mkdtemp(prefix="ab_pairs_", dir=a.workdir)
     made = []
@@ -154,6 +215,8 @@ def main():
                 for side in order:
                     r = run_once(sides[side], w, seed, a.seconds, a.trace)
                     pair[side] = r or {"correct": False, "metrics": {}}
+                    if spans and r:
+                        pair[side]["spans"] = span_stats(sides[side], w, spans)
                 print(f"[ab_pairs] {w} pair {i + 1}/{a.pairs} seed {seed}: " + "  ".join(
                     f"{s} {headline}={pair[s]['metrics'].get(headline, {}).get('value')}"
                     for s in ("base", "change")), file=sys.stderr, flush=True)
@@ -163,6 +226,8 @@ def main():
                     with open(a.out, "w") as f:
                         json.dump(results, f, indent=1)
             print(summarize(w, pairs, better), flush=True)
+            if spans:
+                print(summarize_spans(w, pairs, spans), flush=True)
     finally:
         if not a.keep:
             for path in made:
